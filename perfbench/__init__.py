@@ -1,0 +1,6 @@
+"""End-to-end and per-layer benchmark of psweep_spark.
+
+Entry point: ``python3 perfbench/run.py --workload <name> --seed <n>
+--seconds <s> --trace <0|1>`` from the repository root.  See
+``perfbench/NOTES.md`` for the workloads, sizes and host sizing.
+"""
