@@ -9,9 +9,13 @@ process once.
 
 from __future__ import annotations
 
+import ctypes
 import os
+import signal
+import time
 
 CLK_TCK = os.sysconf("SC_CLK_TCK")
+PR_SET_CHILD_SUBREAPER = 36
 
 
 def _stat_fields(proc: str, pid: int) -> list[str] | None:
@@ -95,3 +99,60 @@ def steal_share(since: tuple[int, int] | None = None, proc: str = "/proc"):
         return now
     total = now[1] - since[1]
     return (now[0] - since[0]) / total if total else 0.0
+
+
+def become_subreaper() -> bool:
+    """Make descendants orphaned by their parent re-parent to this process
+    (Linux ``PR_SET_CHILD_SUBREAPER``), so that :func:`end_tree` can find
+    and reap them: the Spark JVM forks the Python worker daemon, which
+    outlives the JVM by a moment."""
+    try:
+        libc = ctypes.CDLL(None, use_errno=True)
+        return libc.prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0) == 0
+    except (OSError, AttributeError):
+        return False
+
+
+def _reap_children() -> None:
+    """Collect the exit status of every child that has ended."""
+    while True:
+        try:
+            pid, _ = os.waitpid(-1, os.WNOHANG)
+        except ChildProcessError:
+            return
+        if pid == 0:
+            return
+
+
+def live_descendants(root: int | None = None, proc: str = "/proc") -> list[int]:
+    """Descendants of ``root`` (default: this process) that have not
+    ended; zombies count as ended."""
+    root = root or os.getpid()
+    return [
+        p for p in tree_pids(root, proc)
+        if p != root and (_stat_fields(proc, p) or ["Z"])[0] not in ("Z", "X")
+    ]
+
+
+def end_tree(grace: float = 15.0, kill_wait: float = 10.0, poll: float = 0.05) -> list[int]:
+    """Wait up to ``grace`` s for every descendant of this process to end,
+    then SIGKILL those left and wait up to ``kill_wait`` s more, reaping
+    each child as it ends.  Returns the pids that had to be killed."""
+    killed: list[int] = []
+    deadline = time.monotonic() + grace
+    while True:
+        _reap_children()
+        live = live_descendants()
+        if not live:
+            return killed
+        if time.monotonic() >= deadline:
+            if killed:  # killed once already: give up rather than hang
+                return killed
+            for pid in live:
+                try:
+                    os.kill(pid, signal.SIGKILL)
+                except ProcessLookupError:
+                    pass
+            killed = live
+            deadline = time.monotonic() + kill_wait
+        time.sleep(poll)

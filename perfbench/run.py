@@ -22,6 +22,7 @@ import argparse
 import json
 import os
 import shutil
+import signal
 import sys
 import time
 import traceback
@@ -99,6 +100,39 @@ def start_spark(work: str, host: dict):
             ),
         },
     )
+
+
+def stop_spark(spark) -> None:
+    """Stop the session, end the JVM it launched and wait until every
+    process this run started has ended.  The JVM exits only when its
+    stdin closes, which would otherwise happen after this process has
+    exited."""
+    from pyspark import SparkContext
+
+    try:
+        if spark is not None:
+            spark.stop()
+    finally:
+        gateway = SparkContext._gateway
+        SparkContext._gateway = SparkContext._jvm = None
+        proc = getattr(gateway, "proc", None)
+        if gateway is not None:
+            try:
+                gateway.shutdown()
+            except Exception:  # the JVM may be gone already
+                pass
+        if proc is not None:
+            try:
+                proc.stdin.close()
+                proc.wait(timeout=15)
+            except Exception:
+                proc.kill()
+                proc.wait()
+        procstat.end_tree()
+
+
+def _exit_on_sigterm(signum, frame):
+    raise SystemExit(128 + signum)
 
 
 def count_files(path: str) -> int:
@@ -206,9 +240,15 @@ def run(args) -> int:
     base = os.path.join(ROOT, ".perfbench_work")
     work = os.path.join(base, f"{args.workload}-{args.seed}-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
+    # every process the run starts is ended before it exits, also when it
+    # is stopped with SIGTERM or SIGHUP
+    procstat.become_subreaper()
+    signal.signal(signal.SIGTERM, _exit_on_sigterm)
+    signal.signal(signal.SIGHUP, _exit_on_sigterm)
+    spark = None
     t0 = time.perf_counter()
-    spark = start_spark(work, host)
     try:
+        spark = start_spark(work, host)
         wl = make_workload(args.workload, spark, work, args.seed)
         wl.setup()
         setup_s = time.perf_counter() - t0
@@ -263,8 +303,10 @@ def run(args) -> int:
             tracer.dump(os.path.join(
                 base, "traces", f"{args.workload}-seed{args.seed}.json"))
     finally:
-        spark.stop()
-        shutil.rmtree(work, ignore_errors=True)
+        try:
+            stop_spark(spark)
+        finally:
+            shutil.rmtree(work, ignore_errors=True)
 
     print(f"# workload={args.workload} seed={args.seed} host={json.dumps(host)}")
     print(f"# ops={len(ops)} failed_ops={len(failed_ops) / len(ops):.4f} "

@@ -7,6 +7,9 @@ from __future__ import annotations
 
 import contextlib
 import os
+import subprocess
+import sys
+import textwrap
 import time
 
 import pytest
@@ -98,6 +101,33 @@ def test_live_tree_cpu_grows_with_work():
     while time.process_time() - t < 0.2:
         pass
     assert procstat.tree_cpu_seconds() - before >= 0.1
+
+
+def test_end_tree_kills_what_outlives_the_grace():
+    child = subprocess.Popen(["sleep", "30"])
+    assert child.pid in procstat.live_descendants()
+    assert procstat.end_tree(grace=0.1) == [child.pid]
+    assert procstat.live_descendants() == []
+
+
+def test_end_tree_reaps_orphans_of_its_tree():
+    # sh leaves a sleep behind when it exits; as a subreaper the run
+    # inherits it and waits for it
+    script = textwrap.dedent("""
+        import subprocess, sys, time
+        from perfbench import procstat
+        assert procstat.become_subreaper()
+        subprocess.run(["sh", "-c", "sleep 0.5 &"], check=True)
+        orphans = procstat.live_descendants()
+        t = time.monotonic()
+        killed = procstat.end_tree(grace=10)
+        print(len(orphans), killed, procstat.live_descendants(),
+              time.monotonic() - t > 0.2)
+    """)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", script], cwd=root, check=True,
+                         capture_output=True, text=True).stdout
+    assert out.split() == ["1", "[]", "[]", "True"]
 
 
 # -- spans: self time and job attribution ------------------------------------
