@@ -1,14 +1,26 @@
 """The ``run`` operator — SURVEY §2.2 #12-26, M3/M5.
 
 Reference lifecycle (``/root/reference/src/psweep/psweep.py:1295-1492``)
-re-expressed as one lazy Spark plan:
+re-expressed in Spark:
 
-    grid DataFrame
+    grid
       → hash stamp  (JVM-side canonical sha256, hashing.hash_expr)
       → skip-dups anti-join against DB hashes      (#11/#20)
       → id/seq stamping (_run_id/_pset_id/_run_seq/_pset_seq) (#18)
       → mapInPandas(func)  — executors replace mp.Pool AND Dask (#15-17)
       → append to Parquet DB with schema evolution (#21/#28)
+
+A lazy ``DataFrame`` grid (the 10⁹-row scale path) runs this as one
+distributed plan; before the write only a bounded ``take`` (emptiness
+check + schema probe) and a ``max(__order)`` agg (seq slot span)
+execute it.  An eager list-of-dicts grid is already on the driver and
+stays there: under skip-dups against an existing DB its single
+pre-write job collects the anti-join's survivors as
+``(__order, _pset_hash)`` (the DB hash set is anti-joined in Spark,
+never collected); the probe rows come from the typed rows, and
+``_pset_seq`` is stamped from the survivors' submission order, so the
+write plan holds no anti-join, no DB scan and no window, and runs as
+one task (one file per run) unless ``poolsize`` is set.
 
 Retry idempotence (SURVEY §4b): ``_pset_id`` is **UUIDv5 of
 (run_id, pset_seq)**, not a random UUID4 — a re-executed Spark task
@@ -87,7 +99,7 @@ from contextlib import redirect_stderr, redirect_stdout
 from copy import deepcopy
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -241,14 +253,10 @@ def _to_row_value(v, dt: T.DataType):
     return v
 
 
-def prepare_params_df(
-    spark: SparkSession,
-    params: Sequence[dict] | DataFrame,
-    pickle_objects: bool = False,
-) -> DataFrame:
-    """List-of-psets → typed DataFrame (union-of-keys, NULL back-fill)."""
-    if isinstance(params, DataFrame):
-        return params
+def _typed_rows(
+    params: Sequence[dict], pickle_objects: bool = False
+) -> tuple[T.StructType, list[tuple]]:
+    """List of psets → (inferred schema, one typed tuple per pset)."""
     if len(params) == 0:
         raise ValueError("empty params")
     schema = infer_schema(params, pickle_objects=pickle_objects)
@@ -262,7 +270,18 @@ def prepare_params_df(
             return obj_to_bytes(v)
         return _to_row_value(v, f.dataType)
 
-    rows = [tuple(_cell(p, f) for f in schema.fields) for p in params]
+    return schema, [tuple(_cell(p, f) for f in schema.fields) for p in params]
+
+
+def prepare_params_df(
+    spark: SparkSession,
+    params: Sequence[dict] | DataFrame,
+    pickle_objects: bool = False,
+) -> DataFrame:
+    """List-of-psets → typed DataFrame (union-of-keys, NULL back-fill)."""
+    if isinstance(params, DataFrame):
+        return params
+    schema, rows = _typed_rows(params, pickle_objects=pickle_objects)
     return spark.createDataFrame(rows, schema)
 
 
@@ -672,6 +691,62 @@ def skip_dups_anti_join(params_df: DataFrame, hashes: DataFrame) -> DataFrame:
     return params_df.join(hashes, "_pset_hash", "left_anti")
 
 
+def _eager_params_df(
+    spark: SparkSession,
+    db: Database,
+    schema: T.StructType,
+    rows: list[tuple],
+    pset_cols: list[str],
+    skip_dups: bool,
+) -> tuple[DataFrame, list[tuple]]:
+    """Eager grid → (params DataFrame with ``__order`` + ``_pset_hash``,
+    the typed rows it holds, in submission order).
+
+    The grid is already a list on the driver, so it stays there: at
+    most ONE Spark job runs before the write.  Under skip-dups against
+    an existing DB, the grid is hashed and anti-joined in Spark (the DB
+    hash set is never collected) and only the survivors'
+    ``(__order, _pset_hash)`` pairs come back; the write input is then
+    rebuilt from the kept rows, so its plan has no anti-join, no DB
+    scan and no window.  Without skip-dups nothing runs here and the
+    hash is stamped inside the write."""
+    order_schema = T.StructType(
+        schema.fields + [T.StructField("__order", T.LongType(), False)]
+    )
+    grid = spark.createDataFrame(
+        [r + (i,) for i, r in enumerate(rows)], order_schema
+    )
+    grid = grid.withColumn("_pset_hash", df_hash_expr(grid.schema, pset_cols))
+    if not (skip_dups and db.exists()):
+        return grid, rows
+    kept = sorted(
+        tuple(r)
+        for r in skip_dups_anti_join(grid, db.distinct_hashes(spark))
+        .select("__order", "_pset_hash")
+        .collect()
+    )
+    rows = [rows[i] for i, _ in kept]
+    df = spark.createDataFrame(
+        [r + (j, h) for j, (r, (_, h)) in enumerate(zip(rows, kept))],
+        T.StructType(
+            order_schema.fields + [T.StructField("_pset_hash", T.StringType())]
+        ),
+    )
+    return df, rows
+
+
+def _spark_rows(
+    schema: T.StructType, cols: list[str], rows: list[tuple]
+) -> list[Row]:
+    """Typed tuples → the Rows ``select(*cols).take()`` would return for
+    them (the same Python conversions, no Spark job)."""
+    sub = T.StructType([schema[c] for c in cols])
+    idx = [schema.names.index(c) for c in cols]
+    return [
+        sub.fromInternal(sub.toInternal(tuple(r[i] for i in idx))) for r in rows
+    ]
+
+
 # ---------------------------------------------------------------------------
 # run()
 # ---------------------------------------------------------------------------
@@ -722,41 +797,46 @@ def run(
         db = Database(database_dir or os.path.join(calc_dir, "database"))
     os.makedirs(calc_dir, exist_ok=True)
 
-    params_df = prepare_params_df(spark, params, pickle_objects=pickle_objects)
-    pset_cols = filter_cols(params_df.columns)
+    eager = not isinstance(params, DataFrame)
+    if eager:
+        schema, rows = _typed_rows(params, pickle_objects=pickle_objects)
+        pset_cols = filter_cols(schema.names)
+    else:
+        pset_cols = filter_cols(params.columns)
     if not pset_cols:
         raise ValueError("params contain no pset (bare-named) columns")
 
-    # preserve submission order for _pset_seq (reference: seq == index)
-    eager = not isinstance(params, DataFrame)
+    # __order numbers the psets that reach the write; _pset_seq is
+    # pset_base + 1 + __order for both paths
+    n_probe = 8 if safe else 1
     if eager:
-        from pyspark.sql.window import Window
-
-        order = Window.orderBy(F.monotonically_increasing_id())
-        params_df = params_df.withColumn(
-            "__order", F.row_number().over(order) - 1
+        params_df, rows = _eager_params_df(
+            spark, db, schema, rows, pset_cols, skip_dups
         )
+        probe_rows = _spark_rows(schema, pset_cols, rows[:n_probe])
+        n_slots = len(rows)
     else:
         # scale path: a global row_number would single-partition the grid;
         # monotonically_increasing_id keeps seq unique + per-partition
         # monotone without a shuffle (documented deviation: not contiguous)
+        params_df = params.withColumn("__order", F.monotonically_increasing_id())
+        # JVM expr normally; Arrow-batched Python twin when a pset column
+        # is binary (pickled-object cells need value-wise canon — hashing.py)
         params_df = params_df.withColumn(
-            "__order", F.monotonically_increasing_id()
+            "_pset_hash", df_hash_expr(params_df.schema, pset_cols)
         )
-
-    # JVM expr normally; Arrow-batched Python twin when a pset column is
-    # binary (pickled-object cells need value-wise canon — hashing.py)
-    params_df = params_df.withColumn(
-        "_pset_hash", df_hash_expr(params_df.schema, pset_cols)
-    )
-
-    if skip_dups and db.exists():
-        params_df = skip_dups_anti_join(params_df, db.distinct_hashes(spark))
+        if skip_dups and db.exists():
+            params_df = skip_dups_anti_join(params_df, db.distinct_hashes(spark))
+        # one take serves the emptiness check and the schema probe
+        probe_rows = params_df.select(*pset_cols).take(n_probe)
+        # the sparse ids consume up to max(__order)+1 seq slots
+        n_slots = (
+            params_df.agg(F.max("__order")).first()[0] + 1 if probe_rows else 0
+        )
 
     # skip_dups may have filtered everything → return DB unchanged
     # (reference: re-run of identical params appends 0 rows)
-    first_rows = params_df.select(*pset_cols).take(1)
-    if not first_rows:
+    if not probe_rows:
         full = db.load(spark)
         if full is None:
             raise ValueError("empty params and empty database")
@@ -770,29 +850,9 @@ def run(
     # reserve this run's _run_seq and _pset_seq slot range up front
     # (Database.reserve_seqs — lockfile CAS on the meta watermark), so
     # two concurrent run() calls can never stamp colliding seqs even
-    # though both compute and append in parallel.  Slot span: the eager
-    # path consumes exactly count(rows) contiguous slots via
-    # row_number; the lazy path consumes up to max(__order)+1 sparse
-    # slots.  One small agg job over the (post-skip-dups) grid.
-    span_row = params_df.agg(
-        F.count(F.lit(1)).alias("n"), F.max("__order").alias("mx")
-    ).first()
-    n_slots = int(span_row["n"] if eager else span_row["mx"] + 1)
+    # though both compute and append in parallel
     run_seq, pset_base = db.reserve_seqs(spark, n_slots, peek=not save)
-
-    from pyspark.sql.window import Window
-
-    if eager:
-        # small human-authored grids: contiguous seq == submission order
-        # (reference contract: _pset_seq == df.index)
-        seq_col = (
-            F.lit(pset_base)
-            + F.row_number().over(Window.orderBy("__order"))
-        ).cast("long")
-    else:
-        # scale path: no global window; monotonic ids are unique and
-        # per-partition monotone but NOT contiguous (documented deviation)
-        seq_col = (F.lit(pset_base + 1) + F.col("__order")).cast("long")
+    seq_col = (F.lit(pset_base + 1) + F.col("__order")).cast("long")
 
     params_df = (
         params_df.withColumn("_run_id", F.lit(run_id))
@@ -819,11 +879,8 @@ def run(
         # success
         import pandas as pd
 
-        vec_probe_rows = (
-            params_df.select(*pset_cols).take(8) if safe else first_rows
-        )
         probe_res: dict | None = None
-        for probe_row in vec_probe_rows:
+        for probe_row in probe_rows:
             probe_rec = {
                 k: _pyval(v)
                 for k, v in probe_row.asDict(recursive=True).items()
@@ -851,7 +908,7 @@ def run(
                 if not safe:
                     raise
         if probe_res is None:
-            if len(vec_probe_rows) == 8:
+            if len(probe_rows) == 8:
                 raise ValueError(
                     "schema probe: the first 8 psets all failed under "
                     "safe=True; pass result_schema= explicitly"
@@ -865,9 +922,6 @@ def run(
         # safe mode must tolerate a failing first pset: probe a bounded
         # prefix and infer from the first success (failed probes only
         # ever contribute _failed/_exc_txt columns)
-        probe_rows = (
-            params_df.select(*pset_cols).take(8) if safe else first_rows
-        )
         probe_res: dict | None = None
         for probe_row in probe_rows:
             probe = {
@@ -925,6 +979,9 @@ def run(
 
     if poolsize:
         params_df = params_df.repartition(poolsize)
+    elif eager:
+        # a human-sized grid: one task, so one parquet file per run
+        params_df = params_df.coalesce(1)
 
     mapper = _make_mapper(
         func if func is not None else (lambda p: {}),

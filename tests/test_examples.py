@@ -18,7 +18,8 @@ EXAMPLES = sorted(
 
 @pytest.mark.parametrize("script", EXAMPLES)
 def test_example_runs(script):
-    env = dict(os.environ, PYTHONPATH=REPO, SPARK_GRAFT_CPUS="8")
+    env = dict(os.environ, PYTHONPATH=REPO)
+    env.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     proc = subprocess.run(
         [sys.executable, os.path.join(REPO, "examples", script)],
         env=env, capture_output=True, text=True, timeout=300,

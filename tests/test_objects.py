@@ -88,6 +88,36 @@ def test_object_params_skip_dups(spark, tmp_path):
     assert df3.count() == 3
 
 
+def test_object_params_eager_skip_dups_hash(spark, tmp_path):
+    """Eager skip-dups over a pickled column: the survivors' _pset_hash
+    comes back from the anti-join's collect (the Arrow-batched Python
+    hash twin) and is stored as collected, so it must equal pset_hash
+    of the unpickled pset; a repeat run appends 0 rows."""
+    calc = str(tmp_path / "calc")
+    run(spark, _f, pgrid(plist("fn", [np.sin, dummy_func]), plist("x", [1.0])),
+        calc_dir=calc, pickle_objects=True)
+    params = pgrid(
+        plist("fn", [np.cos, np.sin, DummyClass(), dummy_func]),
+        plist("x", [1.0]),
+    )
+    df = run(spark, _f, params, calc_dir=calc, pickle_objects=True,
+             skip_dups=True)
+    ordered = df.orderBy("_pset_seq")
+    rows = ordered.collect()
+    assert len(rows) == 4
+    assert rows[2]["_run_seq"] == rows[3]["_run_seq"] == 1
+    for pset, row in zip(df_extract_params(ordered), rows):
+        assert pset_hash(pset) == row["_pset_hash"]
+    assert [type(p["fn"]) for p in df_extract_params(ordered)][2:] == [
+        type(np.cos), DummyClass,
+    ]
+
+    df2 = run(spark, _f, params, calc_dir=calc, pickle_objects=True,
+              skip_dups=True)
+    assert df2.count() == 4
+    assert df2.select("_run_id").distinct().count() == 2
+
+
 def test_mixed_type_column_pickles_value_wise(spark, tmp_path):
     """A column mixing str/float/callable/instance becomes one pickled
     binary column, but each value hashes by its OWN canonical form —

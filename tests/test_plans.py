@@ -86,7 +86,8 @@ def test_brute_force_topk_broadcasts_queries(spark):
 
 def test_skip_dups_is_join_not_collect(spark, tmp_path):
     """skip_dups must plan as an anti-join against the DB hash relation —
-    never a driver-side collected filter."""
+    never a driver-side collected filter.  An eager run() collects only
+    the grid's survivors of this join, never the DB hashes."""
     from psweep_spark import plist, run
 
     calc = str(tmp_path / "calc")

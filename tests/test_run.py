@@ -19,6 +19,7 @@ from psweep_spark import (
     latest_per_pset,
     pgrid,
     plist,
+    prepare_params_df,
     pset_hash,
     run,
     uuid5_expr,
@@ -73,6 +74,131 @@ def test_skip_dups(spark, calc_dir):
     assert df.count() == 5  # only a=5 added
     assert df.filter(F.col("a") == 5).count() == 1
     assert df.select("_pset_hash").distinct().count() == 5
+
+
+def _run_files(calc_dir, run_id):
+    d = os.path.join(calc_dir, "database", "data", f"_run_id={run_id}")
+    return [f for f in os.listdir(d) if f.endswith(".parquet")]
+
+
+def test_eager_skip_dups_runs_few_jobs(spark, calc_dir):
+    """An eager skip-dups run executes its grid plan once before the
+    write (one collect of the survivors), not once per probe: a second
+    run(skip_dups=True, safe=True) stays within 12 Spark jobs, where
+    the take/agg/take/write sequence took 20."""
+    run(spark, func_a, pgrid([plist("a", list(range(40)))]),
+        calc_dir=calc_dir, skip_dups=True, safe=True)
+    sc = spark.sparkContext
+    group = f"eager-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "second eager run")
+    try:
+        df = run(spark, func_a, pgrid([plist("a", list(range(20, 60)))]),
+                 calc_dir=calc_dir, skip_dups=True, safe=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store lags
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 12, len(jobs)
+    assert df.count() == 60
+
+
+def test_eager_skip_dups_seq_contiguous_in_submission_order(spark, calc_dir):
+    """Repeats interleaved among new psets are dropped and the new rows
+    get _pset_seq = base+1 … base+n in the order they were submitted."""
+    run(spark, func_a, [{"a": 2}, {"a": 4}], calc_dir=calc_dir)
+    grid = [{"a": v} for v in (9, 2, 7, 4, 1, 8)]
+    df = run(spark, func_a, grid, calc_dir=calc_dir, skip_dups=True)
+    new = df.filter(F.col("_run_seq") == 1).orderBy("_pset_seq").collect()
+    assert [r["a"] for r in new] == [9, 7, 1, 8]
+    assert [r["_pset_seq"] for r in new] == [2, 3, 4, 5]
+    assert all(r["result_"] == r["a"] * 10.0 for r in new)
+
+
+def test_eager_probe_rows_match_take(spark):
+    """The eager schema probe reads its rows from the driver-side typed
+    rows; they must equal what a take() of the same grid returns."""
+    import datetime as dt
+
+    from psweep_spark.runner import _spark_rows, _typed_rows
+
+    params = [
+        {"c": 1 + 2j, "t": dt.datetime(2024, 1, 2, 3, 4, 5), "d": dt.date(2024, 1, 2),
+         "v": [1.0, 2.0], "s": "x", "n": None, "o": max},
+        {"c": 0j, "t": dt.datetime(2020, 6, 1), "d": dt.date(1999, 12, 31),
+         "v": [], "s": None, "n": 3, "o": "str"},
+    ]
+    schema, rows = _typed_rows(params, pickle_objects=True)
+    cols = ["c", "d", "n", "o", "s", "t", "v"]
+    taken = prepare_params_df(spark, params, pickle_objects=True).select(*cols).take(2)
+    assert [r.asDict(recursive=True) for r in _spark_rows(schema, cols, rows)] == [
+        r.asDict(recursive=True) for r in taken
+    ]
+
+
+def test_eager_run_writes_one_file(spark, calc_dir):
+    """By default an eager run lands as ONE parquet file in its
+    _run_id= partition, with and without skip-dups (the grid holds more
+    rows than the session has default partitions)."""
+    run(spark, func_a, pgrid([plist("a", list(range(50)))]), calc_dir=calc_dir)
+    df = run(spark, func_a, pgrid([plist("a", list(range(25, 75)))]),
+             calc_dir=calc_dir, skip_dups=True)
+    run_ids = [r["_run_id"] for r in df.select("_run_id").distinct().collect()]
+    assert len(run_ids) == 2
+    for rid in run_ids:
+        assert len(_run_files(calc_dir, rid)) == 1, rid
+
+
+def task_id_func(pset):
+    from pyspark import TaskContext
+
+    tc = TaskContext.get()  # None in the driver-side schema probe
+    return {"task_": tc.partitionId() if tc else -1}
+
+
+def test_poolsize_runs_k_tasks(spark, calc_dir):
+    df = run(spark, task_id_func, pgrid([plist("a", list(range(30)))]),
+             calc_dir=calc_dir, poolsize=3)
+    assert df.select("task_").distinct().count() == 3
+    rid = df.first()["_run_id"]
+    assert len(_run_files(calc_dir, rid)) == 3
+
+
+#: stored columns of a safe=True run with pset cols a, b and result_;
+#: _run_id is the partition directory, so a load lists it last
+STORED_COLUMNS = [
+    ("a", "bigint"),
+    ("b", "string"),
+    ("_pset_hash", "string"),
+    ("_run_seq", "bigint"),
+    ("_pset_seq", "bigint"),
+    ("_pset_id", "string"),
+    ("_calc_dir", "string"),
+    ("result_", "double"),
+    ("_time_utc", "timestamp"),
+    ("_pset_runtime", "double"),
+    ("_exec_host", "string"),
+    ("_failed", "boolean"),
+    ("_exc_txt", "string"),
+]
+
+
+def test_eager_stored_columns_pinned(spark, calc_dir):
+    """Column names, order and types of every run's file — a first run
+    and a skip-dups run alike — and of the loaded table."""
+    run(spark, func_a, pgrid([plist("a", [1, 2, 3]), plist("b", ["x", "y"])]),
+        calc_dir=calc_dir, safe=True)
+    df = run(spark, func_a, pgrid([plist("a", [3, 4]), plist("b", ["x", "y"])]),
+             calc_dir=calc_dir, safe=True, skip_dups=True)
+
+    def cols(schema):
+        return [(f.name, f.dataType.simpleString()) for f in schema.fields]
+
+    assert cols(df.schema) == STORED_COLUMNS + [("_run_id", "string")]
+    run_ids = [r["_run_id"] for r in df.select("_run_id").distinct().collect()]
+    assert len(run_ids) == 2
+    for rid in run_ids:
+        part = os.path.join(calc_dir, "database", "data", f"_run_id={rid}")
+        assert cols(spark.read.parquet(part).schema) == STORED_COLUMNS, rid
 
 
 def test_concurrent_runs_unique_ids_and_seqs(spark, calc_dir):
