@@ -19,6 +19,9 @@ from psweep_spark.session import get_spark  # noqa: E402
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+    # a bounded heap: with the 48g default, G1 grew the session JVM past
+    # a 15 GB host's memory in the million-edge chain test, which needs <4 GB
+    os.environ.setdefault("PSWEEP_SPARK_DRIVER_MEM", "4g")
     s = get_spark(app_name="psweep-spark-tests", shuffle_partitions=8)
     yield s
 
