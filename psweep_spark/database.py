@@ -36,7 +36,6 @@ from pyspark.sql import types as T
 from .hashing import df_hash_expr, filter_cols
 from .metastore import LocalFSMetaStore, MetaStore
 
-META_BASENAME = "_psweep_meta.json"
 META_VERSION_PREFIX = "_psweep_meta.v"
 DATA_DIRNAME = "data"
 LOCK_BASENAME = ".writer_lock"
@@ -45,30 +44,26 @@ LOCK_BASENAME = ".writer_lock"
 class Database:
     """Handle on one experiment database directory.
 
-    ``meta_store`` overrides the commit-metadata backend (default:
-    :class:`LocalFSMetaStore` over the db dir).  All commit metadata —
-    seq watermarks, the advisory writer lock — goes through the store's
-    conditional-put primitive, so pointing this at an object-store
-    implementation makes the commit protocol S3-safe (see
+    All commit metadata — seq watermarks, the advisory writer lock —
+    goes through the conditional-put primitive of ``self.meta_store``
+    (default: :class:`LocalFSMetaStore` over the db dir), so an
+    object-store implementation makes the commit protocol S3-safe (see
     psweep_spark/metastore.py)."""
 
-    #: process-wide override for the default store backend, keyed by db
-    #: path (tests inject the simulated object store here; deployments
-    #: point it at their real store implementation once, instead of
-    #: threading meta_store through every call site)
+    #: process-wide override for the store backend: a callable of the
+    #: db path returning a :class:`MetaStore` (tests inject the
+    #: simulated object store here; deployments point it at their real
+    #: store implementation once)
     default_store_factory = None
 
-    def __init__(self, path: str, meta_store: MetaStore | None = None):
+    def __init__(self, path: str):
         self.path = os.path.abspath(path)
         self.data_path = os.path.join(self.path, DATA_DIRNAME)
-        self.meta_path = os.path.join(self.path, META_BASENAME)
-        if meta_store is None:
-            factory = type(self).default_store_factory
-            meta_store = (
-                factory(self.path) if factory is not None
-                else LocalFSMetaStore(self.path)
-            )
-        self.meta_store = meta_store
+        factory = type(self).default_store_factory
+        self.meta_store: MetaStore = (
+            factory(self.path) if factory is not None
+            else LocalFSMetaStore(self.path)
+        )
 
     # -- existence / meta --------------------------------------------------
 
@@ -90,17 +85,11 @@ class Database:
 
     def read_meta(self) -> dict:
         """Current committed metadata: the highest versioned manifest,
-        falling back to a legacy un-versioned ``_psweep_meta.json``
-        (pre-CAS databases) when no manifest exists."""
+        or ``{}`` when none exists (the seq watermarks then come from
+        the parquet footers, :meth:`max_seqs`)."""
         v = self._meta_version()
-        if v >= 0:
-            raw = self.meta_store.get(self._meta_key(v))
-            if raw is not None:
-                return json.loads(raw)
-        if os.path.isfile(self.meta_path):
-            with open(self.meta_path) as fh:
-                return json.load(fh)
-        return {}
+        raw = self.meta_store.get(self._meta_key(v)) if v >= 0 else None
+        return json.loads(raw) if raw is not None else {}
 
     def update_meta(self, mutate, max_retries: int = 256) -> dict:
         """Commit a metadata update via versioned-manifest CAS.
@@ -120,28 +109,11 @@ class Database:
                 meta, indent=2, sort_keys=True, default=str
             ).encode()
             if self.meta_store.put_if_absent(self._meta_key(v + 1), payload):
-                self._write_legacy_meta(meta)
                 return meta
         raise RuntimeError(
             f"metadata CAS for {self.path} lost {max_retries} races; "
             "pathological writer contention"
         )
-
-    def _write_legacy_meta(self, meta: dict) -> None:
-        """Best-effort human-readable snapshot at the legacy path (the
-        versioned manifests are the source of truth)."""
-        try:
-            os.makedirs(self.path, exist_ok=True)
-            tmp = self.meta_path + f".tmp-{os.getpid()}"
-            with open(tmp, "w") as fh:
-                json.dump(meta, fh, indent=2, sort_keys=True, default=str)
-            os.replace(tmp, self.meta_path)
-        except OSError:
-            pass
-
-    def write_meta(self, meta: dict) -> None:
-        """Replace the committed metadata wholesale (CAS commit)."""
-        self.update_meta(lambda _cur: meta)
 
     # -- concurrency ---------------------------------------------------------
 
@@ -430,14 +402,6 @@ class Database:
             else:
                 for f in os.listdir(src):
                     os.rename(os.path.join(src, f), os.path.join(dst, f))
-
-    def _write(self, df: DataFrame, mode: str) -> None:
-        (
-            df.write.mode(mode)
-            .option("compression", "snappy")
-            .partitionBy("_run_id")
-            .parquet(self.data_path)
-        )
 
     def _rewrite(self, df: DataFrame) -> None:
         tmp = self.data_path + ".rewrite"

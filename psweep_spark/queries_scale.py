@@ -1130,15 +1130,19 @@ def events_cogroup_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_resample_1min(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-filled 1-minute resample per event type — the time-series
-    densification Spark has no primitive for: the minute grid is built
-    executor-side with sequence()+explode from a one-row bounds agg
-    (never a driver loop), cross-joined with the type dim, then
-    left-joined against the real per-minute counts with zero fill.
+    densification Spark has no primitive for.  The per-(type, minute)
+    counts are aggregated once; each counts row then emits its own
+    minute plus the gap up to its type's next minute (a lead() window
+    over the counts), the first row of a type also backfills from the
+    global first minute (lag() is null), and a type's last row runs out
+    to the global last minute.  Every (type, minute) in [lo, hi] is
+    emitted exactly once, n = count or 0: the row set of the oracle's
+    types × minutes grid LEFT JOIN, with no grid built or joined.
 
-    Scale shape: counts aggregate shuffles on (type, minute) — bounded
-    by grid cardinality, not event count; the grid side is |types|·|minutes|
-    rows (tiny vs the event log) and broadcast-joins against the
-    aggregated counts.
+    Scale shape: the counts aggregate shuffles on (type, minute) —
+    bounded by grid cardinality, not event count; the window is one
+    small exchange over that relation, and the global bounds are a
+    one-row broadcast.
 
     Cache lifetime: the counts persist is INTENTIONALLY left for the
     session — the returned plan is lazy, so the builder cannot
@@ -1157,22 +1161,8 @@ def events_resample_1min(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy("event_type", "m").agg(F.count("*").alias("n")),
         "events_resample_counts",
     )
-    # Gap fill WITHOUT the grid join (r12, guide §3 "one broadcast, not
-    # per-leg jobs"): the old shape built the dense grid as
-    # types × minutes and LEFT-JOINED the counts back onto it — four
-    # broadcast legs (bounds, minutes, types, grid), each a scheduled
-    # job, re-deriving from `counts` what one pass over it can emit.
-    # Instead each counts row emits its own minute plus the gap up to
-    # the type's NEXT minute (a lead() window on the tiny grid-bounded
-    # relation), the first row per type additionally backfills from the
-    # global lo, and the last row runs out to the global hi.  Every
-    # (type, minute ∈ [lo, hi]) is generated exactly once with
-    # n = counts[m] or 0 — row set and values identical to the join
-    # form.  One tiny window exchange + one 1-row broadcast replace the
-    # four legs; nothing is ever joined on the dense grid.  (A
-    # per-type map_from_entries lookup was tried first and measured
-    # WORSE: Spark map lookups are linear scans, O(|minutes|) per grid
-    # cell.)
+    # not a per-type map_from_entries lookup: it measured WORSE, as
+    # Spark map lookups are linear scans, O(|minutes|) per grid cell
     bounds = counts.agg(F.min("m").alias("lo"), F.max("m").alias("hi"))
     w = Window.partitionBy("event_type").orderBy("m")
     one_min = F.expr("INTERVAL 1 MINUTE")

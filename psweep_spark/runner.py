@@ -27,19 +27,30 @@ Retry idempotence (SURVEY §4b): ``_pset_id`` is **UUIDv5 of
 mints the same id, so task retries cannot violate the uniqueness
 contract of reference tests/test_all.py:179-199.
 
-Execution semantics parity:
+Per-pset execution (reference func_wrapper / capture_logs_wrapper,
+psweep.py:1197-1292) is ONE function, :func:`_exec_pset`, layered as
+in the reference:
 
-* ``func(pset) -> dict`` receives the fully-stamped pset dict and its
-  result is merged back (reference func_wrapper, psweep.py:1197-1238).
-* ``_time_utc`` is second-resolution UTC (PANDAS_TIME_UNIT="s",
-  psweep.py:32), ``_pset_runtime`` wall-clock seconds, ``_exec_host``
-  the executor hostname.
-* an exception in ``func`` fails the run (reference parity) unless
-  ``safe=True``, which emits ``_failed``/``_exc_txt`` columns instead
-  (the documented safe_func pattern, manual.md:891-944).
-* ``capture_logs`` ∈ {'db','file','db+file'} (psweep.py:1241-1276).
-* ``simulate=True`` clones the DB to ``<calc_dir>.simulate`` and runs
-  the whole pipeline with ``func`` skipped (psweep.py:1279-1292).
+* it stamps ``_time_utc`` (naive UTC, second resolution: the
+  reference's PANDAS_TIME_UNIT="s", psweep.py:32) and ``_exec_host``;
+* it calls ``func(pset) -> dict`` on the fully-stamped pset dict
+  through :func:`_call_func`, the capture layer: ``capture_logs`` ∈
+  {'db','file','db+file'} captures stdout/stderr, and ``safe=True``
+  turns an exception into ``_failed``/``_exc_txt`` columns (keeping the
+  captured logs) instead of failing the run (the documented safe_func
+  pattern, manual.md:891-944);
+* it merges the result back, sets ``_pset_runtime`` (wall-clock
+  seconds), and under ``tmpsave`` pickles the completed pset.
+
+Its callers: the executor-side row mapper (once per pset), the
+driver-side schema probe (with artifact writes off, on the same record
+an executor passes, placeholder ids included), and the public
+``util.func_wrapper`` / ``util.capture_logs_wrapper``, which are thin
+calls into it.  The ``logs.txt`` and tmpsave files are written by one
+writer each (:func:`_write_logs`, :func:`_write_tmpsave`), both
+through :func:`_atomic_write`.  ``simulate=True`` clones the DB to
+``<calc_dir>.simulate`` and runs the whole pipeline with ``func``
+skipped (psweep.py:1279-1292).
 
 Vectorized mode (``func_pandas=``, VERDICT r7 item 1): the per-pset
 dict contract above is the faithful reference semantics
@@ -68,9 +79,9 @@ columns, no per-row Python).  Semantics differences, by design:
   isolation retries.  A result-column collision
   (:class:`VectorizedContractError`) is never converted to
   ``_failed`` — it is a caller bug that would corrupt stored rows.
-* ``tmpsave`` keeps the exact per-pset contract (each completed pset
-  dict pickled to ``calc_dir/tmpsave/<run_id>/<pset_id>.pk`` — the
-  write is inherently per-pset I/O either way).  ``capture_logs`` is
+* ``tmpsave`` keeps the exact per-pset contract and writer (each
+  completed pset dict pickled to ``calc_dir/tmpsave/<run_id>/<pset_id>.pk``
+  — the write is inherently per-pset I/O either way).  ``capture_logs`` is
   supported with PER-BATCH granularity (VERDICT r9 item 7): stdout/
   stderr is captured around each ``func_pandas`` INVOCATION and every
   row of that invocation records the same text — one batch call
@@ -78,7 +89,11 @@ columns, no per-row Python).  Semantics differences, by design:
   fidelity genuinely has no vectorized counterpart.  Under safe=True
   the bisection narrows capture with the calls: an isolated failing
   pset's ``_logs`` holds exactly what its own 1-row call printed.
-  Per-pset log fidelity needs the per-row ``func`` path.
+  Per-pset log fidelity needs the per-row ``func`` path.  The file
+  mode writes through the same :func:`_write_logs`.
+* without a ``func``, the schema probe runs ``func_pandas`` on one-row
+  batches, in the same probe loop and on the same records as the
+  per-row probe.
 
 Output equality with the per-row path (same values, stamps aside) is
 pinned by tests/test_run.py::test_run_vectorized_matches_per_row.
@@ -95,8 +110,7 @@ import time
 import traceback
 import uuid
 from collections.abc import Callable, Sequence
-from contextlib import redirect_stderr, redirect_stdout
-from copy import deepcopy
+from contextlib import contextmanager, redirect_stderr, redirect_stdout
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, Row, SparkSession
@@ -315,10 +329,17 @@ def uuid5_expr(run_id_col: Column, name_col: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# executor-side func wrapper
+# the per-pset executor (reference func_wrapper / capture_logs_wrapper)
 # ---------------------------------------------------------------------------
 
-_PANDAS_TIME_UNIT = "s"  # reference psweep.py:32
+#: what the executor stamps on every pset, never a func result
+_STAMPS = ("_time_utc", "_exec_host", "_pset_runtime")
+
+
+def _utc_seconds(t: float) -> _dt.datetime:
+    """``_time_utc``: naive UTC at second resolution (the reference's
+    PANDAS_TIME_UNIT="s", psweep.py:32)."""
+    return _dt.datetime.fromtimestamp(int(t), _dt.timezone.utc).replace(tzinfo=None)
 
 
 def _atomic_write(path: str, payload: bytes) -> None:
@@ -341,6 +362,95 @@ def _atomic_write(path: str, payload: bytes) -> None:
     os.replace(tmp, path)
 
 
+def _write_logs(calc_dir: str, pset_id: str, logs: str) -> None:
+    """The ``capture_logs`` file: ``<calc_dir>/<pset_id>/logs.txt``."""
+    d = os.path.join(str(calc_dir), str(pset_id))
+    os.makedirs(d, exist_ok=True)
+    _atomic_write(os.path.join(d, "logs.txt"), logs.encode())
+
+
+def _write_tmpsave(pset: dict) -> None:
+    """The ``tmpsave`` file: the completed pset dict, pickled to
+    ``<calc_dir>/tmpsave/<run_id>/<pset_id>.pk``."""
+    d = os.path.join(str(pset["_calc_dir"]), "tmpsave", str(pset["_run_id"]))
+    os.makedirs(d, exist_ok=True)
+    _atomic_write(os.path.join(d, f"{pset['_pset_id']}.pk"), pickle.dumps(pset))
+
+
+@contextmanager
+def _captured(buf: io.StringIO | None):
+    """Redirect stdout and stderr into ``buf``; a no-op for None."""
+    if buf is None:
+        yield
+        return
+    with redirect_stdout(buf), redirect_stderr(buf):
+        yield
+
+
+def _call_func(
+    pset: dict,
+    func: Callable[[dict], dict],
+    capture_logs: str | None = None,
+    safe: bool = False,
+    db_field: str = "_logs",
+) -> dict:
+    """``func(pset)``'s result dict: the capture_logs_wrapper layer.
+
+    ``capture_logs`` ('db'|'file'|'db+file') captures stdout/stderr to
+    ``result[db_field]`` and/or :func:`_write_logs`.  Under ``safe`` an
+    exception becomes ``_failed=True`` + ``_exc_txt`` (the documented
+    safe_func pattern, manual.md:891-944) and keeps the captured logs;
+    a success gets ``_failed=False``."""
+    buf = io.StringIO() if capture_logs else None
+    try:
+        with _captured(buf):
+            result = func(pset) or {}
+        if safe:
+            result.update(_failed=False, _exc_txt=None)
+    except Exception:
+        if not safe:
+            raise
+        result = {"_failed": True, "_exc_txt": traceback.format_exc()}
+    if buf is not None:
+        logs = buf.getvalue()
+        if "db" in capture_logs:
+            result[db_field] = logs
+        if "file" in capture_logs:
+            _write_logs(pset["_calc_dir"], pset["_pset_id"], logs)
+    return result
+
+
+def _exec_pset(
+    pset: dict,
+    func: Callable[[dict], dict],
+    *,
+    capture_logs: str | None = None,
+    safe: bool = False,
+    tmpsave: bool = False,
+    simulate: bool = False,
+    verbose: bool = False,
+) -> dict:
+    """The one per-pset executor (reference func_wrapper,
+    psweep.py:1197-1238):
+
+    1. stamp ``_time_utc`` (:func:`_utc_seconds`) and ``_exec_host``;
+    2. unless ``simulate``, call ``func`` through :func:`_call_func`;
+    3. merge its result into ``pset`` and set ``_pset_runtime``;
+    4. under ``tmpsave``, :func:`_write_tmpsave`.
+
+    Returns ``pset``, updated in place."""
+    t0 = time.time()
+    pset.update(_time_utc=_utc_seconds(t0), _exec_host=socket.gethostname())
+    if verbose:
+        print(pset)
+    if not simulate:
+        pset.update(_call_func(pset, func, capture_logs, safe))
+    pset["_pset_runtime"] = time.time() - t0
+    if tmpsave:
+        _write_tmpsave(pset)
+    return pset
+
+
 def _pyval(v):
     """Arrow/pandas cell → plain Python value for the user's func."""
     if isinstance(v, np.generic):
@@ -348,6 +458,12 @@ def _pyval(v):
     if isinstance(v, np.ndarray):
         return v.tolist()
     return v
+
+
+def _live(rec: dict) -> dict:
+    """An Arrow record → the pset dict ``func`` sees (plain values,
+    framed pickled cells unpickled)."""
+    return {k: maybe_unpickle(_pyval(v)) for k, v in rec.items()}
 
 
 def _make_mapper(
@@ -382,8 +498,6 @@ def _make_mapper(
         def vmapper(batches):
             import pandas as pd
 
-            stamp_names = ("_time_utc", "_exec_host", "_pset_runtime")
-
             def _call(chunk: "pd.DataFrame") -> "pd.DataFrame":
                 # one func_pandas application + contract checks; the
                 # collision check raises VectorizedContractError so
@@ -402,7 +516,7 @@ def _make_mapper(
                     c
                     for c in res.columns
                     if c in chunk.columns
-                    or c in stamp_names
+                    or c in _STAMPS
                     or c in ("_failed", "_exc_txt", "_logs")
                 ]
                 if clobber:
@@ -423,16 +537,15 @@ def _make_mapper(
                 counterpart because one batch call interleaves all its
                 rows' output.  On an exception the partial buffer is
                 recovered by the caller via exc.__psweep_logs__."""
-                if not capture_logs:
-                    return _call(chunk), None
-                buf = io.StringIO()
+                buf = io.StringIO() if capture_logs else None
                 try:
-                    with redirect_stdout(buf), redirect_stderr(buf):
+                    with _captured(buf):
                         res = _call(chunk)
                 except Exception as e:
-                    e.__psweep_logs__ = buf.getvalue()  # noqa: SLF001
+                    if buf is not None:
+                        e.__psweep_logs__ = buf.getvalue()  # noqa: SLF001
                     raise
-                return res, buf.getvalue()
+                return res, (None if buf is None else buf.getvalue())
 
             def _safe_apply(chunk: "pd.DataFrame"):
                 # returns (res, failed, exc_txts, logs) aligned with
@@ -502,19 +615,12 @@ def _make_mapper(
                     if "db" in capture_logs:
                         out["_logs"] = pd.array(logs_col, dtype="string")
                     if "file" in capture_logs:
-                        # reference layout (calc_dir/<pset_id>/logs.txt)
-                        # so per-pset lookup keeps working; content is
-                        # the pset's INVOCATION logs (per-batch text)
+                        # the per-row layout, so per-pset lookup keeps
+                        # working; content is the pset's INVOCATION
+                        # logs (per-batch text)
                         for pid, txt in zip(out["_pset_id"], logs_col):
-                            d = os.path.join(calc_dir, str(pid))
-                            os.makedirs(d, exist_ok=True)
-                            _atomic_write(
-                                os.path.join(d, "logs.txt"),
-                                (txt or "").encode(),
-                            )
-                out["_time_utc"] = _dt.datetime.fromtimestamp(
-                    int(t0), _dt.timezone.utc
-                ).replace(tzinfo=None)
+                            _write_logs(calc_dir, pid, txt or "")
+                out["_time_utc"] = _utc_seconds(t0)
                 out["_exec_host"] = host
                 out["_pset_runtime"] = dt / n if n else 0.0
                 for c in out_names:
@@ -539,24 +645,11 @@ def _make_mapper(
                             # declared long/int type is lossless
                             out[c] = pd.array(col, dtype="Int64")
                 if tmpsave:
-                    # identical contract to the per-row path: each
-                    # completed pset dict (unframed values) pickled to
-                    # calc_dir/tmpsave/<run_id>/<pset_id>.pk — tmpsave
-                    # is inherently per-pset I/O, so the loop costs
-                    # what the files cost
+                    # the per-row file: each completed pset dict
+                    # (unframed values); tmpsave is inherently per-pset
+                    # I/O, so the loop costs what the files cost
                     for rec in out.to_dict("records"):
-                        rec = {
-                            k: maybe_unpickle(_pyval(v))
-                            for k, v in rec.items()
-                        }
-                        d = os.path.join(
-                            calc_dir, "tmpsave", str(rec["_run_id"])
-                        )
-                        os.makedirs(d, exist_ok=True)
-                        _atomic_write(
-                            os.path.join(d, f"{rec['_pset_id']}.pk"),
-                            pickle.dumps(rec),
-                        )
+                        _write_tmpsave(_live(rec))
                 yield out
 
         return vmapper
@@ -577,60 +670,17 @@ def _make_mapper(
     def mapper(batches):
         import pandas as pd
 
-        host = socket.gethostname()
         for pdf in batches:
             out_rows = []
             for rec in pdf.to_dict("records"):
-                # framed pickled cells → live objects for the user's func
-                pset = {k: maybe_unpickle(_pyval(v)) for k, v in rec.items()}
-                t0 = time.time()
-                pset["_time_utc"] = _dt.datetime.fromtimestamp(
-                    int(t0), _dt.timezone.utc
-                ).replace(tzinfo=None)
-                pset["_exec_host"] = host
-                if simulate:
-                    result: dict = {}
-                elif safe or capture_logs:
-                    buf = io.StringIO()
-                    try:
-                        if capture_logs:
-                            with redirect_stdout(buf), redirect_stderr(buf):
-                                result = func(pset) or {}
-                        else:
-                            result = func(pset) or {}
-                        if safe:
-                            result["_failed"] = False
-                            result["_exc_txt"] = None
-                    except Exception:
-                        if not safe:
-                            raise
-                        result = {
-                            "_failed": True,
-                            "_exc_txt": traceback.format_exc(),
-                        }
-                    if capture_logs:
-                        logs = buf.getvalue()
-                        if "db" in capture_logs:
-                            result["_logs"] = logs
-                        if "file" in capture_logs:
-                            d = os.path.join(calc_dir, str(pset["_pset_id"]))
-                            os.makedirs(d, exist_ok=True)
-                            _atomic_write(
-                                os.path.join(d, "logs.txt"), logs.encode()
-                            )
-                else:
-                    result = func(pset) or {}
-                pset.update(result)
-                pset["_pset_runtime"] = time.time() - t0
-                if tmpsave and not simulate:
-                    d = os.path.join(
-                        calc_dir, "tmpsave", str(pset["_run_id"])
-                    )
-                    os.makedirs(d, exist_ok=True)
-                    _atomic_write(
-                        os.path.join(d, f"{pset['_pset_id']}.pk"),
-                        pickle.dumps(pset),
-                    )
+                pset = _exec_pset(
+                    _live(rec),
+                    func,
+                    capture_logs=capture_logs,
+                    safe=safe,
+                    tmpsave=tmpsave and not simulate,
+                    simulate=simulate,
+                )
                 out_rows.append(tuple(_emit(pset, rec, c) for c in out_names))
             out = pd.DataFrame(out_rows, columns=out_names)
             # object → float for double columns so Arrow doesn't choke on
@@ -687,8 +737,14 @@ def skip_dups_anti_join(params_df: DataFrame, hashes: DataFrame) -> DataFrame:
     history.  No hint is forced either way: a forced broadcast would
     OOM executors on a huge DB, a forced shuffle would shuffle the
     grid for a small one.
+
+    The USING join moves ``_pset_hash`` to the front; the output keeps
+    the grid's column order instead, so a skip-dups run stores its
+    columns in the same order as a first run.
     """
-    return params_df.join(hashes, "_pset_hash", "left_anti")
+    return params_df.join(hashes, "_pset_hash", "left_anti").select(
+        *params_df.columns
+    )
 
 
 def _eager_params_df(
@@ -745,6 +801,53 @@ def _spark_rows(
     return [
         sub.fromInternal(sub.toInternal(tuple(r[i] for i in idx))) for r in rows
     ]
+
+
+def _probe_results(
+    probe_rows: list[Row],
+    meta: dict,
+    func: Callable[[dict], dict] | None,
+    func_pandas: "Callable | None",
+    safe: bool,
+) -> dict:
+    """Driver-side schema probe: the result keys of ``func`` — through
+    :func:`_exec_pset`, artifact writes off — or else of ``func_pandas``
+    on a one-row batch, for the record an executor passes for each
+    probe row (``meta`` holds the run's ids, placeholders where they
+    are per-pset).
+
+    Under ``safe`` a failing pset is skipped and the first success
+    wins.  If all 8 probe psets fail, more psets may exist that would
+    succeed, and inferring an empty result schema would silently drop
+    their results, so the probe refuses."""
+    if func is not None:
+
+        def call(rec: dict) -> dict:
+            return _exec_pset(_live(rec), func)
+
+    else:
+        import pandas as pd
+
+        def call(rec: dict) -> dict:
+            res = func_pandas(pd.DataFrame([rec]))
+            return {} if res is None else {c: _pyval(res[c].iloc[0]) for c in res}
+
+    for row in probe_rows:
+        rec = {k: _pyval(v) for k, v in row.asDict(recursive=True).items()}
+        rec.update(meta)
+        try:
+            out = call(rec)
+        except Exception:
+            if not safe:
+                raise
+            continue
+        return {k: v for k, v in out.items() if k not in rec and k not in _STAMPS}
+    if len(probe_rows) == 8:
+        raise ValueError(
+            "schema probe: the first 8 psets all failed under safe=True; "
+            "pass result_schema= explicitly"
+        )
+    return {}
 
 
 # ---------------------------------------------------------------------------
@@ -866,115 +969,38 @@ def run(
     )
 
     # --- result schema ------------------------------------------------------
+    stamp_fields = [
+        ("_time_utc", T.TimestampType()),
+        ("_pset_runtime", T.DoubleType()),
+        ("_exec_host", T.StringType()),
+    ]
+    if safe:
+        stamp_fields += [("_failed", T.BooleanType()), ("_exc_txt", T.StringType())]
+    if capture_logs and "db" in capture_logs:
+        stamp_fields.append(("_logs", T.StringType()))
     if simulate:
         res_fields: list[T.StructField] = []
     elif result_schema is not None:
         res_fields = list(result_schema.fields)
-    elif func is None and func_pandas is not None:
-        # vectorized-only schema probe: driver-side func_pandas calls
-        # on single-row batches shaped exactly like the executor
-        # batches (stamped columns included, pickled cells raw).
-        # safe mode must tolerate a failing first pset, mirroring the
-        # per-row probe: try a bounded prefix, infer from the first
-        # success
-        import pandas as pd
-
-        probe_res: dict | None = None
-        for probe_row in probe_rows:
-            probe_rec = {
-                k: _pyval(v)
-                for k, v in probe_row.asDict(recursive=True).items()
-            }
-            probe_rec.update(
-                _run_id=run_id,
-                _pset_id="00000000-0000-5000-8000-000000000000",
-                _run_seq=run_seq,
-                _pset_seq=pset_base + 1,
-                _pset_hash="",
-                _calc_dir=os.path.abspath(calc_dir),
-            )
-            try:
-                res_pdf = func_pandas(pd.DataFrame([probe_rec]))
-                probe_res = (
-                    {}
-                    if res_pdf is None
-                    else {
-                        c: _pyval(res_pdf[c].iloc[0])
-                        for c in res_pdf.columns
-                    }
-                )
-                break
-            except Exception:
-                if not safe:
-                    raise
-        if probe_res is None:
-            if len(probe_rows) == 8:
-                raise ValueError(
-                    "schema probe: the first 8 psets all failed under "
-                    "safe=True; pass result_schema= explicitly"
-                )
-            probe_res = {}
-        res_fields = list(
-            infer_schema([probe_res], pickle_objects=pickle_objects).fields
-        )
     else:
-        assert func is not None, "func or func_pandas required unless simulate=True"
-        # safe mode must tolerate a failing first pset: probe a bounded
-        # prefix and infer from the first success (failed probes only
-        # ever contribute _failed/_exc_txt columns)
-        probe_res: dict | None = None
-        for probe_row in probe_rows:
-            probe = {
-                k: maybe_unpickle(_pyval(v))
-                for k, v in probe_row.asDict(recursive=True).items()
-            }
-            probe.update(
-                _run_id=run_id,
-                _pset_id="00000000-0000-5000-8000-000000000000",
-                _run_seq=run_seq,
-                _pset_seq=pset_base + 1,
-                _calc_dir=os.path.abspath(calc_dir),
-                _time_utc=_dt.datetime.now(_dt.timezone.utc).replace(
-                    tzinfo=None
-                ),
-                _exec_host=socket.gethostname(),
-            )
-            try:
-                probe_res = func(deepcopy(probe)) or {}
-                break
-            except Exception:
-                if not safe:
-                    raise
-        if probe_res is None:
-            if len(probe_rows) == 8:
-                # more psets may exist that would succeed; inferring an
-                # empty result schema would silently drop their results
-                raise ValueError(
-                    "schema probe: the first 8 psets all failed under "
-                    "safe=True; pass result_schema= explicitly"
-                )
-            probe_res = {}
-        res_fields = list(
-            infer_schema([probe_res], pickle_objects=pickle_objects).fields
-        )
+        if func is None and func_pandas is None:
+            raise ValueError("func or func_pandas required unless simulate=True")
+        meta = {
+            "_pset_hash": "0" * 64,
+            "_run_id": run_id,
+            "_run_seq": run_seq,
+            "_pset_seq": pset_base + 1,
+            "_pset_id": "00000000-0000-5000-8000-000000000000",
+            "_calc_dir": os.path.abspath(calc_dir),
+        }
+        res = _probe_results(probe_rows, meta, func, func_pandas, safe)
+        res_fields = list(infer_schema([res], pickle_objects=pickle_objects).fields)
 
     in_schema = params_df.schema
     out_fields = list(in_schema.fields)
     out_fields += [f for f in res_fields if f.name not in in_schema.names]
-    for name, dt in (
-        ("_time_utc", T.TimestampType()),
-        ("_pset_runtime", T.DoubleType()),
-        ("_exec_host", T.StringType()),
-    ):
-        if name not in [f.name for f in out_fields]:
-            out_fields.append(T.StructField(name, dt, True))
-    if safe:
-        for name, dt in (("_failed", T.BooleanType()), ("_exc_txt", T.StringType())):
-            if name not in [f.name for f in out_fields]:
-                out_fields.append(T.StructField(name, dt, True))
-    if capture_logs and "db" in capture_logs:
-        if "_logs" not in [f.name for f in out_fields]:
-            out_fields.append(T.StructField("_logs", T.StringType(), True))
+    have = {f.name for f in out_fields}
+    out_fields += [T.StructField(n, dt, True) for n, dt in stamp_fields if n not in have]
     out_schema = T.StructType(out_fields)
 
     if poolsize:

@@ -19,6 +19,7 @@ from typing import Any, Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from .grid import is_seq
+from .runner import _call_func, _exec_pset
 
 
 def system(cmd: str, **kwds) -> subprocess.CompletedProcess:
@@ -170,32 +171,14 @@ def func_wrapper(
     verbose: bool = False,
     simulate: bool = False,
 ) -> dict:
-    """Run ``func`` on ONE pset dict, stamping the call-time prefix
-    fields exactly as the executor-side mapper does (reference
-    psweep.py:1197-1238) — the single-pset escape hatch for debugging a
-    workload function outside Spark."""
-    import datetime as _dt
-    import pickle
-    import socket
-    import time
-
-    pset.update(
-        _time_utc=_dt.datetime.utcnow(), _exec_host=socket.gethostname()
+    """Run ``func`` on ONE pset dict through the executor that
+    ``run()`` applies to every pset (reference psweep.py:1197-1238):
+    the same ``_time_utc``/``_exec_host``/``_pset_runtime`` stamps and
+    the same tmpsave file — the single-pset escape hatch for debugging
+    a workload function outside Spark."""
+    return _exec_pset(
+        pset, func, tmpsave=tmpsave, verbose=verbose, simulate=simulate
     )
-    if verbose:
-        print(pset)
-    t0 = time.time()
-    if not simulate:
-        pset.update(func(pset) or {})
-    pset["_pset_runtime"] = time.time() - t0
-    if tmpsave:
-        d = os.path.join(
-            str(pset["_calc_dir"]), "tmpsave", str(pset["_run_id"])
-        )
-        makedirs(d)
-        with open(os.path.join(d, f"{pset['_pset_id']}.pk"), "wb") as fh:
-            pickle.dump(pset, fh)
-    return pset
 
 
 def capture_logs_wrapper(
@@ -207,23 +190,10 @@ def capture_logs_wrapper(
     """Run ``func`` on one pset with stdout/stderr captured to the
     ``db_field`` key and/or a ``logs.txt`` under the pset's calc dir
     (reference psweep.py:1241-1292; same ``db|file|db+file`` modes as
-    ``run(capture_logs=...)``)."""
-    import io
-    from contextlib import redirect_stderr, redirect_stdout
-
+    ``run(capture_logs=...)``, through the same capture layer)."""
     if capture_logs not in ("db", "file", "db+file"):
         raise ValueError(
             f"capture_logs must be db|file|db+file, got {capture_logs!r}"
         )
-    buf = io.StringIO()
-    with redirect_stdout(buf), redirect_stderr(buf):
-        pset.update(func(pset) or {})
-    logs = buf.getvalue()
-    if "db" in capture_logs:
-        pset[db_field] = logs
-    if "file" in capture_logs:
-        d = os.path.join(str(pset["_calc_dir"]), str(pset["_pset_id"]))
-        makedirs(d)
-        with open(os.path.join(d, "logs.txt"), "w") as fh:
-            fh.write(logs)
+    pset.update(_call_func(pset, func, capture_logs, db_field=db_field))
     return pset

@@ -5,11 +5,13 @@
 null-result rows to a shadow DB; schema evolution rehashes history.
 """
 
+import datetime
 import os
 import uuid
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from psweep_spark import (
     RESERVED_COLS,
@@ -937,7 +939,7 @@ def test_load_waits_out_rewrite_window(spark, calc_dir):
     assert __import__("time").monotonic() - t0 < 1.0
 
 
-def test_atomic_artifact_write(tmp_path):
+def test_atomic_artifact_write(tmp_path, monkeypatch):
     """ADVICE r10 #5: per-pset artifact files (logs.txt, tmpsave .pk)
     are committed via unique-temp + os.replace so a retried or
     speculative task can never expose a truncated file."""
@@ -950,3 +952,88 @@ def test_atomic_artifact_write(tmp_path):
         assert fh.read() == b"attempt two (retry)"
     # no temp residue left behind
     assert [f for f in os.listdir(tmp_path) if ".tmp-" in f] == []
+    # the public wrappers write their artifact files through it too
+    import psweep_spark.runner as runner
+    from psweep_spark import capture_logs_wrapper, func_wrapper
+
+    written = []
+
+    def recording_write(path, payload):
+        written.append(os.path.relpath(path, tmp_path))
+        return _atomic_write(path, payload)
+
+    monkeypatch.setattr(runner, "_atomic_write", recording_write)
+    pset = {"_calc_dir": str(tmp_path), "_run_id": "r", "_pset_id": "p", "x": 2}
+    func_wrapper(dict(pset), lambda q: {"y_": 1}, tmpsave=True)
+    capture_logs_wrapper(dict(pset), lambda q: print("hi"), "file")
+    assert written == [os.path.join("tmpsave", "r", "p.pk"), os.path.join("p", "logs.txt")]
+    with open(tmp_path / "p" / "logs.txt") as fh:
+        assert fh.read() == "hi\n"
+
+
+def test_row_func_reads_pset_hash(spark, calc_dir):
+    """The schema probe passes func the record an executor passes, so a
+    row func may read _pset_hash without safe=True."""
+    df = run(spark, lambda p: {"h_": p["_pset_hash"]}, plist("a", [1, 2]),
+             calc_dir=calc_dir)
+    rows = df.collect()
+    assert len(rows) == 2
+    assert all(r["h_"] == r["_pset_hash"] == pset_hash({"a": r["a"]}) for r in rows)
+
+
+def always_fails(pset):
+    raise RuntimeError("nope")
+
+
+def test_row_probe_all_failed_needs_result_schema(spark, calc_dir):
+    """Row path under safe=True: when the first 8 psets all fail, the
+    schema probe refuses to guess an empty result schema; with fewer
+    than 8 psets, all failing, the run stores failed rows."""
+    with pytest.raises(ValueError, match="result_schema"):
+        run(spark, always_fails, pgrid([plist("a", list(range(10)))]),
+            calc_dir=calc_dir, safe=True)
+    df = run(spark, always_fails, pgrid([plist("a", list(range(10)))]),
+             calc_dir=calc_dir, safe=True,
+             result_schema=T.StructType([T.StructField("result_", T.DoubleType())]))
+    assert df.filter(F.col("_failed")).count() == 10
+    assert df.filter(F.col("result_").isNotNull()).count() == 0
+    df = run(spark, always_fails, plist("a", [20, 21]), calc_dir=calc_dir, safe=True)
+    assert df.filter(F.col("_failed")).count() == 12
+
+
+def test_func_wrapper_time_utc_like_run(spark, calc_dir):
+    """func_wrapper stamps _time_utc as run() stores it: a naive UTC
+    datetime at second resolution."""
+    from psweep_spark import func_wrapper
+
+    stored = run(spark, func_a, [{"a": 1}], calc_dir=calc_dir).first()["_time_utc"]
+    got = func_wrapper({"a": 1}, func_a)["_time_utc"]
+    assert type(got) is type(stored)
+    assert got.tzinfo is None and got.microsecond == 0
+    now = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
+    assert abs((now - got).total_seconds()) < 5
+
+
+def test_lazy_skip_dups_keeps_column_order(spark, calc_dir):
+    """A lazy skip-dups run stores its columns in the order of the
+    lazy first run (the USING anti-join used to move _pset_hash to the
+    front)."""
+    from psweep_spark import pgrid_df, plist_df
+
+    def grid(a):
+        return pgrid_df(plist_df(spark, "a", a), plist_df(spark, "b", ["x", "y"]))
+
+    run(spark, func_a, grid([1, 2, 3]), calc_dir=calc_dir, safe=True)
+    df = run(spark, func_a, grid([3, 4]), calc_dir=calc_dir, safe=True, skip_dups=True)
+    first, second = (
+        r["_run_id"]
+        for r in df.select("_run_id", "_run_seq").distinct().orderBy("_run_seq").collect()
+    )
+    assert df.filter(F.col("_run_id") == second).count() == 2
+
+    def names(rid):
+        part = os.path.join(calc_dir, "database", "data", f"_run_id={rid}")
+        return spark.read.parquet(part).columns
+
+    assert names(first)[:3] == ["a", "b", "_pset_hash"]
+    assert names(second) == names(first)
