@@ -7,21 +7,33 @@ Parquet table:
 * **append** = write new part files (``mode=append``), partitioned by
   ``_run_id`` → partition pruning for per-run queries, no rewrite of
   history on the hot path.
-* **union-of-keys schema evolution** (reference ``df_update_pset_cols``,
-  psweep.py:690-710): new result columns appear via parquet
-  ``mergeSchema`` on read (absent-in-old-files → NULL, which reproduces
-  the ``FILL_VALUE = pd.NA`` back-fill).  New *pset* columns trigger a
-  one-time rewrite because every historical ``_pset_hash`` must be
-  recomputed over the widened pset column set (psweep.py:1432-1437;
-  tests/test_all.py:1476-1524).  Scale note: pset-schema widening is a
-  rare, human-initiated event; the rewrite is a single distributed
-  read→withColumn→write job, not a driver loop.
+* **the manifest pins the table schema** (reference
+  ``df_update_pset_cols``, psweep.py:690-710, merges each run's new
+  keys into the schema once, at append time; so does this engine).
+  Every commit folds the run's schema into the versioned manifest:
+  columns keep their first-commit order, new ones go at the end in
+  commit order, ``_run_id`` is last, field metadata (the pickled-column
+  flag) is kept.  :meth:`Database.load` reads with that schema, so it
+  runs no Spark job (no ``mergeSchema`` footer scan); columns absent
+  from older files read as NULL, the reference's ``FILL_VALUE = pd.NA``
+  back-fill.  New *pset* columns trigger a one-time rewrite because
+  every historical ``_pset_hash`` must be recomputed over the widened
+  pset column set (psweep.py:1432-1437; tests/test_all.py:1476-1524) —
+  a single distributed read→withColumn→write job, not a driver loop.
 * type conflicts across appends are an error (typed core replaces the
   reference's dtype=object wash, SURVEY §1.2).
+
+The manifest also holds the ``_run_seq``/``_pset_seq`` watermarks, so
+:meth:`Database.reserve_seqs` reads no data either.  A manifest without
+a schema (a DB written before the schema was pinned, or a clone made
+without its store) falls back to a ``mergeSchema`` read and a footer
+scan; its next append records both.
 """
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import json
 import os
 import shutil
@@ -29,7 +41,7 @@ import time
 import uuid
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -37,18 +49,59 @@ from .hashing import df_hash_expr, filter_cols
 from .metastore import LocalFSMetaStore, MetaStore
 
 META_VERSION_PREFIX = "_psweep_meta.v"
+SCHEMA_PREFIX = "_psweep_schema."
 DATA_DIRNAME = "data"
 LOCK_BASENAME = ".writer_lock"
+SEQ_COLS = ("_run_seq", "_pset_seq")
+
+
+def _fold_schema(old: T.StructType | None, new: T.StructType) -> T.StructType:
+    """``old``'s columns in order, then ``new``'s new columns in their
+    order, ``_run_id`` last, every field nullable (as Parquet reads
+    them).  A column whose type changes raises ``TypeError``; a
+    ``NullType`` side yields to the typed one."""
+    fields = {f.name: f for f in (old.fields if old is not None else [])}
+    for f in new.fields:
+        o = fields.get(f.name)
+        if o is None or isinstance(o.dataType, T.NullType):
+            fields[f.name] = f  # a replaced key keeps its position
+        elif o.dataType != f.dataType and not isinstance(f.dataType, T.NullType):
+            raise TypeError(
+                f"column {f.name!r} changes type across appends: "
+                f"{o.dataType.simpleString()} -> {f.dataType.simpleString()}; "
+                "the engine's typed core requires type-stable columns "
+                "(cast explicitly, or use a new column name)"
+            )
+    order = [n for n in fields if n != "_run_id"] + (
+        ["_run_id"] if "_run_id" in fields else []
+    )
+    return T.StructType([
+        T.StructField(n, fields[n].dataType, True, fields[n].metadata)
+        for n in order
+    ])
+
+
+def _conform(df: DataFrame, schema: T.StructType) -> DataFrame:
+    """``df`` projected onto ``schema``: missing columns as typed NULLs
+    carrying the schema's field metadata."""
+    have = set(df.columns)
+    return df.select(*[
+        F.col(f.name) if f.name in have
+        else F.lit(None).cast(f.dataType).alias(f.name, metadata=f.metadata)
+        for f in schema.fields
+    ])
 
 
 class Database:
     """Handle on one experiment database directory.
 
-    All commit metadata — seq watermarks, the advisory writer lock —
-    goes through the conditional-put primitive of ``self.meta_store``
-    (default: :class:`LocalFSMetaStore` over the db dir), so an
-    object-store implementation makes the commit protocol S3-safe (see
-    psweep_spark/metastore.py)."""
+    All commit metadata — the pinned schema, seq watermarks, the
+    advisory writer lock — goes through the conditional-put primitive
+    of ``self.meta_store`` (default: :class:`LocalFSMetaStore` over the
+    db dir), so an object-store implementation makes the metadata
+    commit S3-safe (see psweep_spark/metastore.py).  The data commit is
+    not: staged files still move into ``data/`` by POSIX ``os.rename``
+    under :meth:`writer_lock`."""
 
     #: process-wide override for the store backend: a callable of the
     #: db path returning a :class:`MetaStore` (tests inject the
@@ -83,13 +136,14 @@ class Database:
     def _meta_key(version: int) -> str:
         return f"{META_VERSION_PREFIX}{version:012d}.json"
 
+    def _read_version(self, version: int) -> dict:
+        raw = self.meta_store.get(self._meta_key(version)) if version >= 0 else None
+        return json.loads(raw) if raw is not None else {}
+
     def read_meta(self) -> dict:
         """Current committed metadata: the highest versioned manifest,
-        or ``{}`` when none exists (the seq watermarks then come from
-        the parquet footers, :meth:`max_seqs`)."""
-        v = self._meta_version()
-        raw = self.meta_store.get(self._meta_key(v)) if v >= 0 else None
-        return json.loads(raw) if raw is not None else {}
+        or ``{}`` when none exists."""
+        return self._read_version(self._meta_version())
 
     def update_meta(self, mutate, max_retries: int = 256) -> dict:
         """Commit a metadata update via versioned-manifest CAS.
@@ -99,12 +153,18 @@ class Database:
         First writer wins; on conflict the loop re-reads and re-applies
         ``mutate`` against the winner's state — so racing writers
         serialize without any lock, on any store with conditional put.
-        Returns the committed dict.  ``mutate`` may run several times
-        and must be side-effect-free apart from its return value (any
-        bookkeeping it records should be overwritten on re-run)."""
+        Returns the committed dict.  ``mutate`` may run several times;
+        apart from its return value its only allowed side effect is an
+        idempotent put of an immutable content-addressed key (the
+        pinned schema).  A ``mutate`` that returns ``None`` has nothing
+        to change: no version is put and the current dict is returned.
+        An exception raised by ``mutate`` aborts the commit."""
         for _ in range(max_retries):
             v = self._meta_version()
-            meta = mutate(dict(self.read_meta()))
+            cur = self._read_version(v)
+            meta = mutate(dict(cur))
+            if meta is None:
+                return cur
             payload = json.dumps(
                 meta, indent=2, sort_keys=True, default=str
             ).encode()
@@ -114,6 +174,64 @@ class Database:
             f"metadata CAS for {self.path} lost {max_retries} races; "
             "pathological writer contention"
         )
+
+    # -- pinned schema -------------------------------------------------------
+
+    def _put_schema(self, schema: T.StructType) -> str:
+        """Store ``schema`` once under its content-addressed key."""
+        payload = json.dumps(
+            schema.jsonValue(), sort_keys=True, separators=(",", ":")
+        ).encode()
+        key = f"{SCHEMA_PREFIX}{hashlib.sha256(payload).hexdigest()[:16]}.json"
+        self.meta_store.put_if_absent(key, payload)
+        return key
+
+    def pinned_schema(self, meta: dict | None = None) -> T.StructType | None:
+        """The table schema the manifest ``meta`` (default: the current
+        one) pins, or ``None`` when it pins none."""
+        key = (self.read_meta() if meta is None else meta).get("schema")
+        raw = self.meta_store.get(key) if key else None
+        return T.StructType.fromJson(json.loads(raw)) if raw is not None else None
+
+    def _commit_schema(
+        self,
+        spark: SparkSession,
+        schema: T.StructType,
+        seqs: tuple[int, int] = (-1, -1),
+    ) -> None:
+        """Fold ``schema`` into the pinned schema and move the
+        watermarks past ``seqs`` (the max ``_run_seq``/``_pset_seq`` of
+        rows that did not reserve theirs) in one manifest CAS.  Called
+        before the files that carry ``schema`` are moved in, so no
+        reader sees a column the pinned schema lacks.  Puts nothing
+        when nothing changes — the common case of a run whose columns
+        are all known and whose seqs were reserved.  A manifest without
+        a schema over existing data takes the table's merged schema and
+        footer maxima first (once; both are Spark jobs)."""
+
+        @functools.cache
+        def table() -> tuple[T.StructType, tuple[int, int]]:
+            return self.load(spark).schema, self.max_seqs(spark)
+
+        def mutate(meta: dict) -> dict | None:
+            pinned = cur = self.pinned_schema(meta)
+            r, p = seqs
+            if pinned is None and self.exists():
+                cur, (tr, tp) = table()
+                r, p = max(r, tr), max(p, tp)
+            folded = _fold_schema(cur, schema)
+            old_r = int(meta.get("next_run_seq", 0))
+            old_p = int(meta.get("next_pset_seq", 0))
+            next_r, next_p = max(old_r, r + 1), max(old_p, p + 1)
+            if folded == pinned and (next_r, next_p) == (old_r, old_p):
+                return None
+            meta["schema"] = self._put_schema(folded)
+            meta["next_run_seq"], meta["next_pset_seq"] = next_r, next_p
+            meta.setdefault("engine", "psweep_spark")
+            meta.setdefault("created_utc", time.time())
+            return meta
+
+        self.update_meta(mutate)
 
     # -- concurrency ---------------------------------------------------------
 
@@ -126,8 +244,9 @@ class Database:
     ):
         """Advisory exclusive writer lock (``O_CREAT|O_EXCL`` lockfile).
 
-        Guards the commit-time critical sections only — seq
-        reservation and the file moves of :meth:`append` — NEVER the
+        Guards the commit-time critical sections only — the schema
+        fold and file moves of :meth:`append`, and the table swap of
+        :meth:`compact` — NEVER the
         user-function compute, so concurrent ``run()`` calls overlap
         their expensive work and serialize only for milliseconds of
         bookkeeping.  The reference is single-process and immune by
@@ -141,8 +260,9 @@ class Database:
         (``O_EXCL``), HDFS, and S3/GCS/Azure-style stores.  Note that
         the CRITICAL invariants (seq uniqueness) do NOT depend on this
         lock anymore: :meth:`reserve_seqs` commits through lock-free
-        manifest CAS (:meth:`update_meta`); the lock only serializes
-        local data-directory moves.
+        manifest CAS (:meth:`update_meta`), and a schema type
+        conflict is caught inside the commit's CAS; the lock only
+        serializes local data-directory moves.
 
         A lock record older than ``stale_after`` seconds (per the
         timestamp in its payload, not filesystem mtime) is presumed
@@ -188,14 +308,18 @@ class Database:
         """Atomically claim the next ``_run_seq`` and an exclusive
         ``_pset_seq`` range ``[base+1, base+n_pset_slots]``.
 
-        Returns ``(run_seq, pset_base)``.  The watermark lives in the
-        committed metadata, so a reservation is visible to other
+        Returns ``(run_seq, pset_base)``.  The watermarks live in the
+        committed manifest, so a reservation is visible to other
         writers BEFORE the run's data lands — this closes the
         lost-update race where two concurrent ``run()`` calls both read
-        ``max_seqs`` and stamp identical seqs.  Watermarks only ever
-        move forward (``max(parquet footer stats, meta watermark)``),
-        so a run that reserves and then crashes leaves a harmless gap,
-        never a collision.
+        the table's max seqs and stamp identical seqs.  Watermarks only
+        ever move forward, so a run that reserves and then crashes
+        leaves a harmless gap, never a collision.  Rows that land
+        without a reservation (:meth:`rehash_from_reference`, a direct
+        :meth:`append` of rows carrying seqs) move the watermarks past
+        themselves at commit, so the manifest alone answers: no Spark
+        job.  Only a manifest without a pinned schema (see the module
+        docstring) also takes the table's maxima from :meth:`max_seqs`.
 
         Reservation commits through LOCK-FREE manifest CAS
         (:meth:`update_meta`): of N racing writers one wins the
@@ -207,7 +331,7 @@ class Database:
         ``peek=True`` (used by ``save=False`` runs, which never append)
         computes the same values without committing anything."""
         def _compute(meta: dict) -> tuple[int, int]:
-            mr, mp = self.max_seqs(spark)
+            mr, mp = (-1, -1) if "schema" in meta else self.max_seqs(spark)
             run_seq = max(mr + 1, int(meta.get("next_run_seq", 0)))
             pset_base = max(mp, int(meta.get("next_pset_seq", 0)) - 1)
             return run_seq, pset_base
@@ -268,7 +392,10 @@ class Database:
             time.sleep(0.05)
 
     def load(self, spark: SparkSession) -> DataFrame | None:
-        """Full table with union-of-keys schema (mergeSchema read).
+        """Full table, read with the manifest's pinned schema: no Spark
+        job, columns absent from older files read as NULL.  Without a
+        pinned schema it falls back to a ``mergeSchema`` read (one
+        footer job).
 
         Waits out a concurrent rewrite's rename window (see
         :meth:`_exists_settling_rewrite`) so readers racing a
@@ -276,14 +403,18 @@ class Database:
         table."""
         if not self._exists_settling_rewrite():
             return None
-        return spark.read.option("mergeSchema", "true").parquet(self.data_path)
+        schema = self.pinned_schema()
+        if schema is None:
+            return spark.read.option("mergeSchema", "true").parquet(self.data_path)
+        return spark.read.schema(schema).parquet(self.data_path)
 
     def max_seqs(self, spark: SparkSession) -> tuple[int, int]:
-        """(max _run_seq, max _pset_seq) or (-1, -1) on empty DB.
+        """(max _run_seq, max _pset_seq) over the stored rows, or
+        (-1, -1) on an empty DB.
 
-        Column-stats only scan — parquet footers answer this without
-        reading data pages.
-        """
+        One aggregate job over the table.  Only the fallback for a
+        manifest without a pinned schema uses it; :meth:`reserve_seqs`
+        otherwise reads the manifest's watermarks."""
         df = self.load(spark)
         if df is None:
             return (-1, -1)
@@ -304,88 +435,70 @@ class Database:
 
     # -- write ---------------------------------------------------------------
 
-    def _check_type_compat(self, old: T.StructType, new: T.StructType) -> None:
-        old_types = {f.name: f.dataType for f in old.fields}
-        for f in new.fields:
-            ot = old_types.get(f.name)
-            if ot is not None and ot != f.dataType and not isinstance(
-                ot, T.NullType
-            ) and not isinstance(f.dataType, T.NullType):
-                raise TypeError(
-                    f"column {f.name!r} changes type across appends: "
-                    f"{ot.simpleString()} -> {f.dataType.simpleString()}; "
-                    "the engine's typed core requires type-stable columns "
-                    "(cast explicitly, or use a new column name)"
-                )
-
     def append(self, new_df: DataFrame) -> None:
         """Append one run's rows; widen + rehash history if pset cols grew.
 
         **Stage-then-commit** (concurrency-safe): the new rows are
         first written to a private staging directory — the expensive
         part (executing the run's ``mapInPandas`` plan) runs with NO
-        lock held, so concurrent runs overlap their compute.  Commit
-        then happens under :meth:`writer_lock` and is pure filesystem
-        renames: each staged ``_run_id=…`` partition directory moves
-        into the table (run ids are UUIDs, so directories never
-        collide; part filenames carry the Spark task UUID, so even a
-        shared directory merge is collision-free).  This also removes
-        the classic concurrent-append hazard of two Spark jobs sharing
-        one ``_temporary`` committer directory under the same output
-        path.  The rare pset-schema-widening rewrite keeps the lock for
-        its whole read→rehash→swap, since it replaces the table."""
+        lock held, so concurrent runs overlap their compute.  The write
+        also observes the rows' max ``_run_seq``/``_pset_seq`` (no
+        extra job), so rows that reserved no seqs still move the
+        watermarks.  Commit then happens under :meth:`writer_lock`:
+        the run's schema is checked against and folded into the pinned
+        schema (a type change raises ``TypeError`` and nothing lands)
+        in one manifest CAS, then the staged files move in by
+        filesystem renames: each staged ``_run_id=…`` partition
+        directory moves into the table (run ids are UUIDs, so
+        directories never collide; part filenames carry the Spark task
+        UUID, so even a shared directory merge is collision-free).
+        This also removes the classic concurrent-append hazard of two
+        Spark jobs sharing one ``_temporary`` committer directory under
+        the same output path.  The rare pset-schema-widening rewrite
+        keeps the lock for its whole read→rehash→swap, since it
+        replaces the table."""
         spark = new_df.sparkSession
         staging = f"{self.data_path}.staging-{uuid.uuid4().hex[:12]}"
+        seq_cols = [c for c in SEQ_COLS if c in new_df.columns]
+        obs = Observation()
+        staged = (
+            new_df.observe(obs, *[F.max(c).alias(c) for c in seq_cols])
+            if seq_cols else new_df
+        )
         (
-            new_df.write.mode("overwrite")
+            staged.write.mode("overwrite")
             .option("compression", "snappy")
             .partitionBy("_run_id")
             .parquet(staging)
         )
+        got = obs.get if seq_cols else {}
+        seqs = tuple(-1 if got.get(c) is None else int(got[c]) for c in SEQ_COLS)
         try:
             with self.writer_lock():
                 old_df = self.load(spark)
                 if old_df is None:
+                    self._commit_schema(spark, new_df.schema, seqs)
                     os.rename(staging, self.data_path)
-
-                    def _stamp(meta: dict) -> dict:
-                        meta.setdefault("engine", "psweep_spark")
-                        meta.setdefault("created_utc", time.time())
-                        return meta
-
-                    self.update_meta(_stamp)
                     return
-
-                self._check_type_compat(old_df.schema, new_df.schema)
-                old_pset = set(filter_cols(old_df.columns))
-                new_pset = set(filter_cols(new_df.columns))
-
-                if new_pset - old_pset:
+                # fails fast on a type change; the CAS checks again
+                target = _fold_schema(old_df.schema, new_df.schema)
+                if set(filter_cols(new_df.columns)) - set(filter_cols(old_df.columns)):
                     # pset schema widened: NULL-extend history and
                     # recompute every _pset_hash over the union pset col
                     # set (reference psweep.py:1432-1437) — one-time
                     # table rewrite.  Re-read the STAGED files (schema
                     # pinned — no partition-value type re-inference)
                     # instead of re-executing the run plan.
-                    staged_df = spark.read.schema(new_df.schema).parquet(
-                        staging
-                    )
-                    widened = old_df
-                    new_types = {
-                        f.name: f.dataType for f in new_df.schema.fields
-                    }
-                    for c in sorted(new_pset - old_pset):
-                        widened = widened.withColumn(
-                            c, F.lit(None).cast(new_types[c])
-                        )
-                    all_df = widened.unionByName(
-                        staged_df, allowMissingColumns=True
+                    staged_df = spark.read.schema(new_df.schema).parquet(staging)
+                    all_df = _conform(old_df, target).unionByName(
+                        _conform(staged_df, target)
                     )
                     all_df = all_df.withColumn(
                         "_pset_hash", df_hash_expr(all_df.schema)
                     )
-                    self._rewrite(all_df)
+                    self._rewrite(all_df, seqs)
                 else:
+                    self._commit_schema(spark, new_df.schema, seqs)
                     self._commit_staging(staging)
         finally:
             shutil.rmtree(staging, ignore_errors=True)
@@ -403,7 +516,10 @@ class Database:
                 for f in os.listdir(src):
                     os.rename(os.path.join(src, f), os.path.join(dst, f))
 
-    def _rewrite(self, df: DataFrame) -> None:
+    def _rewrite(self, df: DataFrame, seqs: tuple[int, int] = (-1, -1)) -> None:
+        """Replace the table with ``df``: write it aside, pin its schema
+        (:meth:`_commit_schema`), then swap directories by rename.
+        The caller holds :meth:`writer_lock`."""
         tmp = self.data_path + ".rewrite"
         (
             df.write.mode("overwrite")
@@ -411,6 +527,7 @@ class Database:
             .partitionBy("_run_id")
             .parquet(tmp)
         )
+        self._commit_schema(df.sparkSession, df.schema, seqs)
         old = self.data_path + ".old"
         if os.path.isdir(old):
             shutil.rmtree(old)
@@ -542,22 +659,24 @@ class Database:
         scan planning/open overhead — the classic small-file problem of
         append-heavy stores.  Compaction = read + coalesce to
         ``ceil(bytes / target)`` output files per partition + atomic
-        swap (same swap path as schema-evolve rewrites).  Returns the
-        file count after compaction.
+        swap (same swap path as schema-evolve rewrites), under
+        :meth:`writer_lock` so no concurrent append is swapped away.
+        Returns the file count after compaction.
 
         At 100 TB this runs per-partition (only recent ``_run_id``
         partitions fragment; old ones stay untouched) — here the local
         table is small enough to rewrite whole."""
-        df = self.load(spark)
-        if df is None:
-            return 0
-        total_bytes = sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _, files in os.walk(self.data_path)
-            for f in files
-        )
-        n_files = max(1, -(-total_bytes // (target_file_mb * 1024 * 1024)))
-        self._rewrite(df.repartition(int(n_files)))
+        with self.writer_lock():
+            df = self.load(spark)
+            if df is None:
+                return 0
+            total_bytes = sum(
+                os.path.getsize(os.path.join(root, f))
+                for root, _, files in os.walk(self.data_path)
+                for f in files
+            )
+            n_files = max(1, -(-total_bytes // (target_file_mb * 1024 * 1024)))
+            self._rewrite(df.repartition(int(n_files)))
         return sum(
             1
             for root, _, files in os.walk(self.data_path)

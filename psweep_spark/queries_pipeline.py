@@ -692,6 +692,7 @@ def stream_near_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_dedup_index,
         write_dedup_index,
     )
+    from psweep_spark.streaming import await_drain
 
     docs = _ld(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
@@ -760,7 +761,7 @@ def stream_near_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = stream.writeStream.foreachBatch(gate).trigger(
         availableNow=True
     ).start()
-    q.awaitTermination(300)
+    await_drain(q, 300, "stream_near_dedup_docs")
     if pairs:
         return spark.createDataFrame(
             pairs, "id_new long, id_old long, jaccard double"

@@ -31,6 +31,7 @@ __all__ = [
     "running_user_stats",
     "stream_to_database",
     "run_available_now",
+    "await_drain",
     "state_partitions_for_volume",
 ]
 
@@ -266,6 +267,24 @@ def state_partitions_for_volume(
     return max(floor, math.ceil(total / bytes_per_partition))
 
 
+def await_drain(q, timeout_sec: float, name: str) -> None:
+    """Wait for an ``availableNow`` query to finish draining.
+
+    ``timeout_sec`` is a HANG guard, not an SLA: availableNow terminates
+    by itself once input is drained, so hitting the timeout means
+    something is wedged.  The query is then stopped and ``TimeoutError``
+    raised, so the caller never returns what the sink holds so far as a
+    complete result.  (A silent ``awaitTermination(300)`` once returned
+    a PARTIAL memory table when a 9.8M-session drain ran long — a
+    correctness result quietly truncated to 0 rows.)"""
+    if not q.awaitTermination(timeout_sec):
+        q.stop()
+        raise TimeoutError(
+            f"streaming drain '{name}' still running after "
+            f"{timeout_sec}s; refusing to return a partial result"
+        )
+
+
 def run_available_now(
     result: DataFrame,
     name: str,
@@ -298,19 +317,8 @@ def run_available_now(
             .start()
         )
         # micro-batches are planned asynchronously after start(), so the
-        # conf must stay pinned until the drain finishes.
-        # ``timeout_sec`` is a HANG guard, not an SLA: availableNow
-        # terminates by itself once input is drained, so hitting the
-        # timeout means something is wedged — raise loudly.  (r5 sf10
-        # lesson: the old silent `awaitTermination(300)` returned a
-        # PARTIAL memory table when a 9.8M-session drain ran long —
-        # a correctness result quietly truncated to 0 rows.)
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise TimeoutError(
-                f"streaming drain '{name}' still running after "
-                f"{timeout_sec}s; refusing to return a partial table"
-            )
+        # conf must stay pinned until the drain finishes
+        await_drain(q, timeout_sec, name)
     finally:
         if state_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)

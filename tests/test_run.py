@@ -85,9 +85,10 @@ def _run_files(calc_dir, run_id):
 
 def test_eager_skip_dups_runs_few_jobs(spark, calc_dir):
     """An eager skip-dups run executes its grid plan once before the
-    write (one collect of the survivors), not once per probe: a second
-    run(skip_dups=True, safe=True) stays within 12 Spark jobs, where
-    the take/agg/take/write sequence took 20."""
+    write (one collect of the survivors), not once per probe, and its
+    Database calls read the manifest, not the table: a second
+    run(skip_dups=True, safe=True) stays within 5 Spark jobs, where the
+    take/agg/take/write sequence with schema-merge loads took 20."""
     run(spark, func_a, pgrid([plist("a", list(range(40)))]),
         calc_dir=calc_dir, skip_dups=True, safe=True)
     sc = spark.sparkContext
@@ -100,7 +101,7 @@ def test_eager_skip_dups_runs_few_jobs(spark, calc_dir):
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store lags
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 12, len(jobs)
+    assert 0 < len(jobs) <= 5, len(jobs)
     assert df.count() == 60
 
 
@@ -288,11 +289,16 @@ def test_concurrent_runs_on_simulated_object_store(spark, calc_dir, monkeypatch)
     InMemoryConditionalStore.reset_namespace(db_path)
 
 
-def test_reserve_seqs_watermark_survives_crashed_run(spark, calc_dir):
+def test_reserve_seqs_watermark_survives_crashed_run(spark, calc_dir, monkeypatch):
     """A reservation that never lands (crashed run) must leave a GAP,
-    never a collision: the meta watermark outranks parquet footer
-    stats when handing out the next seq range."""
+    never a collision: the manifest watermark alone hands out the next
+    seq range, without scanning the table."""
     run(spark, func_a, pgrid([plist("a", [1, 2])]), calc_dir=calc_dir)
+
+    def no_scan(self, spark):
+        raise AssertionError("max_seqs scanned the table")
+
+    monkeypatch.setattr(Database, "max_seqs", no_scan)
     db = Database(os.path.join(calc_dir, "database"))
     rs, pb = db.reserve_seqs(spark, 5)  # reserved, then "crash"
     assert (rs, pb) == (1, 1)
@@ -557,6 +563,38 @@ def test_rehash_from_reference_migration(spark, calc_dir):
         Database(os.path.join(calc_dir, "db2")).rehash_from_reference(
             spark, bad_path
         )
+
+
+def test_rehash_import_moves_seq_watermarks(spark, calc_dir, monkeypatch):
+    """Imported reference rows reserve no seqs; their commit moves the
+    manifest watermarks past them, so the next run() stamps seqs above
+    every imported row without scanning the table."""
+    import pandas as pd
+
+    from psweep_spark.hashing import pset_hash as ph
+
+    rows = [
+        {"a": a, "y_": 1.0, "_pset_hash": ph({"a": a}, method="joblib-sha1"),
+         "_run_id": f"11111111-2222-3333-4444-00000000000{rs}",
+         "_pset_id": f"00000000-0000-0000-0000-0000000000{ps:02d}",
+         "_run_seq": rs, "_pset_seq": ps, "_calc_dir": calc_dir}
+        for a, rs, ps in [(1, 3, 7), (2, 3, 8), (3, 5, 12)]
+    ]
+    os.makedirs(calc_dir, exist_ok=True)
+    fixture = os.path.join(calc_dir, "database.pk")
+    pd.DataFrame(rows).astype(object).to_pickle(fixture)
+    Database(os.path.join(calc_dir, "database")).rehash_from_reference(
+        spark, fixture
+    )
+
+    def no_scan(self, spark):
+        raise AssertionError("max_seqs scanned the table")
+
+    monkeypatch.setattr(Database, "max_seqs", no_scan)
+    df = run(spark, func_a, pgrid([plist("a", [4, 5])]), calc_dir=calc_dir)
+    new = df.where(F.col("a") >= 4).collect()
+    assert {r["_run_seq"] for r in new} == {6}
+    assert sorted(r["_pset_seq"] for r in new) == [13, 14]
 
 
 def test_metastore_atomic_publish_and_delete_if_match(tmp_path):

@@ -304,3 +304,52 @@ def test_state_partitions_for_volume(tmp_path):
         p = f"/root/testdata/{sf}/events.parquet"
         if os.path.exists(p):
             assert st.state_partitions_for_volume(p) == 2
+
+
+class _StubQuery:
+    """A StreamingQuery stand-in whose drain never finishes in time."""
+
+    def __init__(self, finishes: bool):
+        self.finishes = finishes
+        self.waited = None
+        self.stopped = False
+
+    def awaitTermination(self, timeout):  # noqa: N802 - pyspark's name
+        self.waited = timeout
+        return self.finishes
+
+    def stop(self):
+        self.stopped = True
+
+
+def test_await_drain_stops_and_raises_on_timeout():
+    """A drain that outlives its timeout is stopped and fails loudly
+    instead of handing back a partial result; one that finishes in
+    time is left alone."""
+    q = _StubQuery(finishes=False)
+    with pytest.raises(TimeoutError, match="near_dedup.*300s"):
+        st.await_drain(q, 300, "near_dedup")
+    assert q.waited == 300 and q.stopped
+
+    q = _StubQuery(finishes=True)
+    st.await_drain(q, 5, "ok")
+    assert q.waited == 5 and not q.stopped
+
+
+def test_near_dedup_drain_timeout_raises(spark, monkeypatch):
+    """``stream_near_dedup_docs`` goes through the checked drain: when
+    the drain reports a timeout the query raises instead of returning
+    the pairs gathered so far."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from psweep_spark.queries_pipeline import stream_near_dedup_docs
+
+    real = StreamingQuery.awaitTermination
+
+    def timed_out(self, timeout=None):
+        real(self, timeout)  # let the drain finish, then report a timeout
+        return False
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", timed_out)
+    with pytest.raises(TimeoutError, match="stream_near_dedup_docs"):
+        stream_near_dedup_docs(spark, SF_DIR)

@@ -54,6 +54,7 @@ returning torn/regressed data is what fails the stress.
 Writes STRESS_CONCURRENT.json at the repo root.
 
 Usage: python tools/stress_concurrent_writers.py [W R G K]  (default 4 6 200 3)
+(work dir: $PSQ_STRESS_DIR, default /tmp/psq_stress_writers)
 Internal: --worker <i> <W> <R> <G> <dbroot>
           --reader <i> <G> <W·R> <dbroot>
 """
@@ -70,7 +71,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-SCRATCH = "/tmp/psq_stress_writers"
+#: work dir for the writers' calc dirs and the shared DB
+SCRATCH = os.environ.get("PSQ_STRESS_DIR", "/tmp/psq_stress_writers")
 
 
 def worker(i: int, w: int, r: int, g: int, dbroot: str) -> None:
