@@ -20,14 +20,19 @@ Parquet table:
   every historical ``_pset_hash`` must be recomputed over the widened
   pset column set (psweep.py:1432-1437; tests/test_all.py:1476-1524) —
   a single distributed read→withColumn→write job, not a driver loop.
+* **the manifest names the live table directory** (``data_dir``,
+  relative to the DB root; ``data`` when absent).  A rewrite writes a
+  fresh ``data.<uuid>`` directory and publishes it in the same manifest
+  CAS that folds the schema — one atomic switch, like the reference
+  rewriting ``database.pk`` whole.  A DB that is never rewritten keeps
+  ``data/_run_id=*/part-*.parquet``.
 * type conflicts across appends are an error (typed core replaces the
   reference's dtype=object wash, SURVEY §1.2).
 
 The manifest also holds the ``_run_seq``/``_pset_seq`` watermarks, so
 :meth:`Database.reserve_seqs` reads no data either.  A manifest without
-a schema (a DB written before the schema was pinned, or a clone made
-without its store) falls back to a ``mergeSchema`` read and a footer
-scan; its next append records both.
+a schema (a DB written before the schema was pinned) falls back to a
+``mergeSchema`` read and a footer scan; its next append records both.
 """
 
 from __future__ import annotations
@@ -51,6 +56,7 @@ from .metastore import LocalFSMetaStore, MetaStore
 META_VERSION_PREFIX = "_psweep_meta.v"
 SCHEMA_PREFIX = "_psweep_schema."
 DATA_DIRNAME = "data"
+DATA_DIR_KEY = "data_dir"
 LOCK_BASENAME = ".writer_lock"
 SEQ_COLS = ("_run_seq", "_pset_seq")
 
@@ -95,13 +101,15 @@ def _conform(df: DataFrame, schema: T.StructType) -> DataFrame:
 class Database:
     """Handle on one experiment database directory.
 
-    All commit metadata — the pinned schema, seq watermarks, the
-    advisory writer lock — goes through the conditional-put primitive
-    of ``self.meta_store`` (default: :class:`LocalFSMetaStore` over the
-    db dir), so an object-store implementation makes the metadata
-    commit S3-safe (see psweep_spark/metastore.py).  The data commit is
-    not: staged files still move into ``data/`` by POSIX ``os.rename``
-    under :meth:`writer_lock`."""
+    All commit metadata — the pinned schema, seq watermarks, the live
+    table directory, the advisory writer lock — goes through the
+    conditional-put primitive of ``self.meta_store`` (default:
+    :class:`LocalFSMetaStore` over the db dir), so an object-store
+    implementation makes the metadata commit S3-safe (see
+    psweep_spark/metastore.py).  A rewrite is a metadata commit too: it
+    publishes a fresh directory by CAS.  A run commit is not: its
+    staged ``_run_id=…`` directories still move into the live directory
+    by POSIX ``os.rename`` under :meth:`writer_lock`."""
 
     #: process-wide override for the store backend: a callable of the
     #: db path returning a :class:`MetaStore` (tests inject the
@@ -111,7 +119,6 @@ class Database:
 
     def __init__(self, path: str):
         self.path = os.path.abspath(path)
-        self.data_path = os.path.join(self.path, DATA_DIRNAME)
         factory = type(self).default_store_factory
         self.meta_store: MetaStore = (
             factory(self.path) if factory is not None
@@ -120,8 +127,21 @@ class Database:
 
     # -- existence / meta --------------------------------------------------
 
+    def _live_dir(self, meta: dict) -> str:
+        """The table directory the manifest ``meta`` names."""
+        return os.path.join(self.path, meta.get(DATA_DIR_KEY, DATA_DIRNAME))
+
+    @property
+    def data_path(self) -> str:
+        """The live table directory, as the current manifest names it."""
+        return self._live_dir(self.read_meta())
+
+    @staticmethod
+    def _has_rows(d: str) -> bool:
+        return os.path.isdir(d) and bool(os.listdir(d))
+
     def exists(self) -> bool:
-        return os.path.isdir(self.data_path) and bool(os.listdir(self.data_path))
+        return self._has_rows(self.data_path)
 
     def _meta_version(self) -> int:
         """Highest committed manifest version, or -1 if none."""
@@ -198,40 +218,49 @@ class Database:
         spark: SparkSession,
         schema: T.StructType,
         seqs: tuple[int, int] = (-1, -1),
-    ) -> None:
+        data_dir: str | None = None,
+    ) -> str:
         """Fold ``schema`` into the pinned schema and move the
         watermarks past ``seqs`` (the max ``_run_seq``/``_pset_seq`` of
-        rows that did not reserve theirs) in one manifest CAS.  Called
-        before the files that carry ``schema`` are moved in, so no
-        reader sees a column the pinned schema lacks.  Puts nothing
-        when nothing changes — the common case of a run whose columns
-        are all known and whose seqs were reserved.  A manifest without
-        a schema over existing data takes the table's merged schema and
-        footer maxima first (once; both are Spark jobs)."""
+        rows that did not reserve theirs) in one manifest CAS; with
+        ``data_dir`` (relative to the DB root) the same CAS makes that
+        directory live.  Called before the files that carry ``schema``
+        land, so no reader sees a column the pinned schema lacks.  Puts
+        nothing when nothing changes.  A manifest without a schema over
+        existing data takes the table's merged schema and footer maxima
+        first (Spark jobs).  Returns the live directory that the
+        committed manifest replaced."""
 
         @functools.cache
         def table() -> tuple[T.StructType, tuple[int, int]]:
             return self.load(spark).schema, self.max_seqs(spark)
 
+        live: dict[str, str] = {}
+
         def mutate(meta: dict) -> dict | None:
+            live["v"] = self._live_dir(meta)
             pinned = cur = self.pinned_schema(meta)
             r, p = seqs
-            if pinned is None and self.exists():
+            if pinned is None and self._has_rows(live["v"]):
                 cur, (tr, tp) = table()
                 r, p = max(r, tr), max(p, tp)
             folded = _fold_schema(cur, schema)
             old_r = int(meta.get("next_run_seq", 0))
             old_p = int(meta.get("next_pset_seq", 0))
             next_r, next_p = max(old_r, r + 1), max(old_p, p + 1)
-            if folded == pinned and (next_r, next_p) == (old_r, old_p):
+            if (folded == pinned and (next_r, next_p) == (old_r, old_p)
+                    and data_dir is None):
                 return None
             meta["schema"] = self._put_schema(folded)
             meta["next_run_seq"], meta["next_pset_seq"] = next_r, next_p
+            if data_dir is not None:
+                meta[DATA_DIR_KEY] = data_dir
             meta.setdefault("engine", "psweep_spark")
             meta.setdefault("created_utc", time.time())
             return meta
 
         self.update_meta(mutate)
+        return live["v"]
 
     # -- concurrency ---------------------------------------------------------
 
@@ -242,36 +271,24 @@ class Database:
         poll: float = 0.05,
         stale_after: float = 3600.0,
     ):
-        """Advisory exclusive writer lock (``O_CREAT|O_EXCL`` lockfile).
+        """Advisory exclusive writer lock, taken by conditional put of
+        a lock record (``MetaStore.put_if_absent``), so it works on any
+        store.
 
-        Guards the commit-time critical sections only — the schema
-        fold and file moves of :meth:`append`, and the table swap of
-        :meth:`compact` — NEVER the
-        user-function compute, so concurrent ``run()`` calls overlap
-        their expensive work and serialize only for milliseconds of
-        bookkeeping.  The reference is single-process and immune by
-        construction (``/root/reference/src/psweep/psweep.py`` holds
-        the whole DataFrame in memory); a shared Parquet table needs
-        this explicit guard.
+        Guards the commits of :meth:`append` and the rewrites of
+        :meth:`append` and :meth:`compact`, NEVER the user-function
+        compute: concurrent ``run()`` calls overlap their expensive work
+        and serialize only for milliseconds of bookkeeping.  Seq
+        uniqueness and schema type checks do not depend on it (both are
+        manifest CAS); it keeps a run's directory moves out of a
+        directory that a rewrite is replacing.
 
-        The lock is acquired through the meta store's CONDITIONAL PUT
-        (``metastore.MetaStore.put_if_absent``) — the one primitive
-        object stores provide — so the same protocol runs on local FS
-        (``O_EXCL``), HDFS, and S3/GCS/Azure-style stores.  Note that
-        the CRITICAL invariants (seq uniqueness) do NOT depend on this
-        lock anymore: :meth:`reserve_seqs` commits through lock-free
-        manifest CAS (:meth:`update_meta`), and a schema type
-        conflict is caught inside the commit's CAS; the lock only
-        serializes local data-directory moves.
-
-        A lock record older than ``stale_after`` seconds (per the
-        timestamp in its payload, not filesystem mtime) is presumed
-        abandoned and stolen.  Both the steal and the release go
-        through ``MetaStore.delete_if_match`` — a caller only removes
-        the exact lock record it observed (stale payload) or wrote
-        (its own payload), so a stealer can never delete a FRESH lock
-        another waiter just acquired, and a holder that was itself
-        stolen from cannot release the successor's lock."""
+        A record older than ``stale_after`` seconds (per the timestamp
+        in its payload) is presumed abandoned and stolen.  Steal and
+        release go through ``MetaStore.delete_if_match``, so a caller
+        only removes the exact record it observed or wrote: a stealer
+        never deletes a fresh lock, and a holder stolen from never
+        releases its successor's."""
         deadline = time.monotonic() + timeout
         while True:
             payload = f"{os.getpid()} {time.time()} {uuid.uuid4().hex}".encode()
@@ -309,24 +326,14 @@ class Database:
         ``_pset_seq`` range ``[base+1, base+n_pset_slots]``.
 
         Returns ``(run_seq, pset_base)``.  The watermarks live in the
-        committed manifest, so a reservation is visible to other
-        writers BEFORE the run's data lands — this closes the
-        lost-update race where two concurrent ``run()`` calls both read
-        the table's max seqs and stamp identical seqs.  Watermarks only
-        ever move forward, so a run that reserves and then crashes
-        leaves a harmless gap, never a collision.  Rows that land
-        without a reservation (:meth:`rehash_from_reference`, a direct
-        :meth:`append` of rows carrying seqs) move the watermarks past
-        themselves at commit, so the manifest alone answers: no Spark
-        job.  Only a manifest without a pinned schema (see the module
-        docstring) also takes the table's maxima from :meth:`max_seqs`.
-
-        Reservation commits through LOCK-FREE manifest CAS
-        (:meth:`update_meta`): of N racing writers one wins the
-        conditional put of version N+1, the rest recompute against the
-        winner's watermark and retry — correct on any store with
-        conditional put, including S3-style object stores with no
-        atomic rename or O_EXCL.
+        manifest and move by lock-free CAS (:meth:`update_meta`), so a
+        reservation is visible to other writers BEFORE the run's data
+        lands and two racing ``run()`` calls never stamp the same seqs.
+        Watermarks only move forward: a run that reserves and crashes
+        leaves a gap, never a collision.  Rows that land without a
+        reservation move the watermarks past themselves at commit, so
+        the manifest alone answers, with no Spark job; only a manifest
+        without a pinned schema also takes :meth:`max_seqs`.
 
         ``peek=True`` (used by ``save=False`` runs, which never append)
         computes the same values without committing anything."""
@@ -355,58 +362,31 @@ class Database:
 
     # -- read ----------------------------------------------------------------
 
-    #: how long :meth:`load` waits out a concurrent :meth:`_rewrite`'s
-    #: rename window before concluding the table is genuinely absent.
-    #: The window itself is two ``os.rename`` calls (microseconds); the
-    #: budget is generous so a reader never mistakes an in-flight
-    #: rewrite for an empty DB (ADVICE r10 #1).
-    rewrite_wait_s: float = 10.0
-
-    def _exists_settling_rewrite(self) -> bool:
-        """:meth:`exists`, retrying through a concurrent rewrite swap.
-
-        :meth:`_rewrite` commits via ``rename(data → data.old)`` then
-        ``rename(data.rewrite → data)`` — between the two renames
-        ``data/`` is absent.  A plain existence check in that window
-        reports "table empty", which a concurrent ``run()``'s skip-dups
-        anti-join would silently believe (re-running every pset).  If
-        ``data/`` is absent but either swap marker (``data.old`` /
-        ``data.rewrite``) is present, a rewrite is in flight: wait it
-        out briefly instead of returning False.  No markers and no data
-        means the DB really is empty.
-        """
-        deadline = time.monotonic() + self.rewrite_wait_s
-        while True:
-            if self.exists():
-                return True
-            in_flight = os.path.isdir(self.data_path + ".old") or os.path.isdir(
-                self.data_path + ".rewrite"
-            )
-            if not in_flight:
-                # markers may have vanished in the instant AFTER our
-                # exists() check and the rewrite completed — re-check
-                # once so that interleaving still reads the new table
-                return self.exists()
-            if time.monotonic() >= deadline:
-                return self.exists()
-            time.sleep(0.05)
-
     def load(self, spark: SparkSession) -> DataFrame | None:
-        """Full table, read with the manifest's pinned schema: no Spark
-        job, columns absent from older files read as NULL.  Without a
-        pinned schema it falls back to a ``mergeSchema`` read (one
-        footer job).
+        """Full table, or ``None`` while no run has landed.
 
-        Waits out a concurrent rewrite's rename window (see
-        :meth:`_exists_settling_rewrite`) so readers racing a
-        pset-schema-widening rewrite never observe a phantom-empty
-        table."""
-        if not self._exists_settling_rewrite():
+        The live directory and the pinned schema come from ONE manifest
+        version, so a reader racing a rewrite gets the old table or the
+        new one, never a missing or mixed one (a replaced directory
+        stays until :meth:`vacuum`).  Columns absent from older files
+        read as NULL.  Without a pinned schema it falls back to a
+        ``mergeSchema`` read (one footer job).
+
+        Spark lists the directory here; past 32 ``_run_id`` partitions
+        (``spark.sql.sources.parallelPartitionDiscovery.threshold``)
+        that listing is one job (pyspark 4.1.2: 0 jobs at ≤ 32, 1 past
+        that).  An explicit file list goes parallel past the same
+        threshold (30 paths: 0 jobs, 33: 1), and one relation over
+        several ``_run_id``-partitioned roots is refused ("Conflicting
+        directory structures detected", with or without ``basePath``)."""
+        meta = self.read_meta()
+        live = self._live_dir(meta)
+        if not self._has_rows(live):
             return None
-        schema = self.pinned_schema()
+        schema = self.pinned_schema(meta)
         if schema is None:
-            return spark.read.option("mergeSchema", "true").parquet(self.data_path)
-        return spark.read.schema(schema).parquet(self.data_path)
+            return spark.read.option("mergeSchema", "true").parquet(live)
+        return spark.read.schema(schema).parquet(live)
 
     def max_seqs(self, spark: SparkSession) -> tuple[int, int]:
         """(max _run_seq, max _pset_seq) over the stored rows, or
@@ -447,18 +427,17 @@ class Database:
         watermarks.  Commit then happens under :meth:`writer_lock`:
         the run's schema is checked against and folded into the pinned
         schema (a type change raises ``TypeError`` and nothing lands)
-        in one manifest CAS, then the staged files move in by
-        filesystem renames: each staged ``_run_id=…`` partition
-        directory moves into the table (run ids are UUIDs, so
-        directories never collide; part filenames carry the Spark task
-        UUID, so even a shared directory merge is collision-free).
-        This also removes the classic concurrent-append hazard of two
-        Spark jobs sharing one ``_temporary`` committer directory under
-        the same output path.  The rare pset-schema-widening rewrite
-        keeps the lock for its whole read→rehash→swap, since it
-        replaces the table."""
+        in one manifest CAS, then each staged ``_run_id=…`` directory
+        moves into the live directory by rename (run ids are UUIDs and
+        part filenames carry the task UUID, so nothing collides; no two
+        Spark jobs share a ``_temporary`` committer directory).  A
+        pset-schema-widening append is a :meth:`_rewrite` instead,
+        under the same lock: history and the staged rows are rehashed
+        into a fresh directory that one manifest CAS makes live."""
         spark = new_df.sparkSession
-        staging = f"{self.data_path}.staging-{uuid.uuid4().hex[:12]}"
+        staging = os.path.join(
+            self.path, f"{DATA_DIRNAME}.staging-{uuid.uuid4().hex[:12]}"
+        )
         seq_cols = [c for c in SEQ_COLS if c in new_df.columns]
         obs = Observation()
         staged = (
@@ -476,19 +455,17 @@ class Database:
         try:
             with self.writer_lock():
                 old_df = self.load(spark)
-                if old_df is None:
-                    self._commit_schema(spark, new_df.schema, seqs)
-                    os.rename(staging, self.data_path)
-                    return
-                # fails fast on a type change; the CAS checks again
-                target = _fold_schema(old_df.schema, new_df.schema)
-                if set(filter_cols(new_df.columns)) - set(filter_cols(old_df.columns)):
+                if old_df is not None and (
+                    set(filter_cols(new_df.columns))
+                    - set(filter_cols(old_df.columns))
+                ):
                     # pset schema widened: NULL-extend history and
                     # recompute every _pset_hash over the union pset col
                     # set (reference psweep.py:1432-1437) — one-time
                     # table rewrite.  Re-read the STAGED files (schema
                     # pinned — no partition-value type re-inference)
                     # instead of re-executing the run plan.
+                    target = _fold_schema(old_df.schema, new_df.schema)
                     staged_df = spark.read.schema(new_df.schema).parquet(staging)
                     all_df = _conform(old_df, target).unionByName(
                         _conform(staged_df, target)
@@ -504,12 +481,15 @@ class Database:
             shutil.rmtree(staging, ignore_errors=True)
 
     def _commit_staging(self, staging: str) -> None:
-        """Move staged partition directories into the table (renames)."""
+        """Move staged partition directories into the live directory
+        (renames).  The caller holds :meth:`writer_lock`."""
+        live = self.data_path
+        os.makedirs(live, exist_ok=True)
         for name in os.listdir(staging):
             if not name.startswith("_run_id="):
                 continue  # _SUCCESS marker etc.
             src = os.path.join(staging, name)
-            dst = os.path.join(self.data_path, name)
+            dst = os.path.join(live, name)
             if not os.path.exists(dst):
                 os.rename(src, dst)
             else:
@@ -517,23 +497,21 @@ class Database:
                     os.rename(os.path.join(src, f), os.path.join(dst, f))
 
     def _rewrite(self, df: DataFrame, seqs: tuple[int, int] = (-1, -1)) -> None:
-        """Replace the table with ``df``: write it aside, pin its schema
-        (:meth:`_commit_schema`), then swap directories by rename.
+        """Replace the table with ``df``: write it to a fresh
+        ``data.<uuid>`` directory, then make that directory live in the
+        manifest CAS that pins its schema (:meth:`_commit_schema`).  The
+        replaced directory is retired, not deleted — a reader that
+        resolved it just before the CAS may still be listing it — so
+        its mtime is touched and :meth:`vacuum` removes it once aged.
         The caller holds :meth:`writer_lock`."""
-        tmp = self.data_path + ".rewrite"
+        name = f"{DATA_DIRNAME}.{uuid.uuid4().hex}"
         (
             df.write.mode("overwrite")
             .option("compression", "snappy")
             .partitionBy("_run_id")
-            .parquet(tmp)
+            .parquet(os.path.join(self.path, name))
         )
-        self._commit_schema(df.sparkSession, df.schema, seqs)
-        old = self.data_path + ".old"
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-        os.rename(self.data_path, old)
-        os.rename(tmp, self.data_path)
-        shutil.rmtree(old)
+        os.utime(self._commit_schema(df.sparkSession, df.schema, seqs, name))
 
     # -- snapshots (reference `backup`, psweep.py:1417-1427) ------------------
 
@@ -544,7 +522,7 @@ class Database:
         Iceberg snapshots are the cluster-scale mechanism — no copy).
         """
         dst = f"{self.path}.bak_{tag}"
-        shutil.copytree(self.path, dst)
+        self._copy_to(dst)
         return dst
 
     def clone_to(self, dst_path: str) -> "Database":
@@ -553,34 +531,49 @@ class Database:
         if os.path.isdir(dst.path):
             shutil.rmtree(dst.path)
         if os.path.isdir(self.path):
-            shutil.copytree(self.path, dst.path)
+            self._copy_to(dst.path)
         return dst
+
+    def _copy_to(self, dst_path: str) -> None:
+        """Copy the DB directory.  A store that does not live in it
+        gets the current manifest and its schema, so the copy names the
+        same live directory (not a retired one)."""
+        shutil.copytree(self.path, dst_path)
+        meta, dst = self.read_meta(), Database(dst_path)
+        if dst.read_meta() != meta:
+            if "schema" in meta:
+                raw = self.meta_store.get(meta["schema"])
+                dst.meta_store.put_if_absent(meta["schema"], raw)
+            dst.update_meta(lambda _: meta)
 
     # -- maintenance ---------------------------------------------------------
 
     def vacuum(self, max_age_s: float = 24 * 3600.0) -> list[str]:
-        """Remove leftover transaction debris older than ``max_age_s``:
-        ``data.staging-*`` dirs from appends that crashed between the
-        staged write and commit, and a ``data.old`` left by an
-        interrupted rewrite swap.  Never touches live data — staged
-        dirs are private to their (dead) writer, and ``data.old`` only
-        survives when the rename to ``data`` already succeeded.
-        Returns the removed paths."""
+        """Remove every ``data`` or ``data.*`` directory that the
+        current manifest does not name and that is older than
+        ``max_age_s``: directories retired by a rewrite (aged from their
+        retirement), ``data.staging-*`` left by appends that crashed
+        between the staged write and the commit, and rewrites that
+        crashed before their CAS.  The live directory is never removed;
+        a young one is spared because a writer may still be filling it
+        or a reader still listing it.  Returns the removed paths."""
         removed: list[str] = []
-        parent = os.path.dirname(self.data_path)
-        base = os.path.basename(self.data_path)
-        if not os.path.isdir(parent):
+        if not os.path.isdir(self.path):
             return removed
+        live = self.data_path
         now = time.time()
-        for name in os.listdir(parent):
-            if name.startswith(base + ".staging-") or name == base + ".old":
-                p = os.path.join(parent, name)
-                try:
-                    if now - os.path.getmtime(p) >= max_age_s:
-                        shutil.rmtree(p, ignore_errors=True)
-                        removed.append(p)
-                except OSError:
-                    continue
+        for name in os.listdir(self.path):
+            p = os.path.join(self.path, name)
+            if p == live or not (
+                name == DATA_DIRNAME or name.startswith(DATA_DIRNAME + ".")
+            ):
+                continue
+            try:
+                if os.path.isdir(p) and now - os.path.getmtime(p) >= max_age_s:
+                    shutil.rmtree(p, ignore_errors=True)
+                    removed.append(p)
+            except OSError:
+                continue
         return removed
 
     def rehash_from_reference(
@@ -652,20 +645,14 @@ class Database:
 
     def compact(self, spark: SparkSession, target_file_mb: int = 128) -> int:
         """Small-file compaction: rewrite the table so each ``_run_id``
-        partition holds ~``target_file_mb``-sized files.
-
-        Every incremental ``run()`` appends its own files; after
-        thousands of runs the table is dominated by kilobyte files and
-        scan planning/open overhead — the classic small-file problem of
-        append-heavy stores.  Compaction = read + coalesce to
-        ``ceil(bytes / target)`` output files per partition + atomic
-        swap (same swap path as schema-evolve rewrites), under
-        :meth:`writer_lock` so no concurrent append is swapped away.
-        Returns the file count after compaction.
-
-        At 100 TB this runs per-partition (only recent ``_run_id``
-        partitions fragment; old ones stay untouched) — here the local
-        table is small enough to rewrite whole."""
+        partition holds ~``target_file_mb``-sized files (every ``run()``
+        appends its own small files).  The rows are repartitioned to
+        ``ceil(bytes / target)`` files and go through :meth:`_rewrite`
+        under :meth:`writer_lock`, so no concurrent append is left
+        behind in the replaced directory.  That directory is retired,
+        not deleted: the disk space it holds comes back at
+        :meth:`vacuum` once it is older than ``max_age_s``, not right
+        away.  Returns the file count after compaction."""
         with self.writer_lock():
             df = self.load(spark)
             if df is None:

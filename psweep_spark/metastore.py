@@ -10,9 +10,9 @@ no atomic rename and no ``O_CREAT|O_EXCL``.  What they DO provide is a
 ``If-None-Match: *`` since 2024, GCS ``ifGenerationMatch=0``, Azure
 ``If-None-Match`` ETags, HDFS/local ``O_EXCL``).  So conditional put is
 the ONLY primitive this interface requires; everything above it —
-versioned-manifest CAS for sequence reservation and the pinned table
-schema, the advisory writer lock for local file moves — is built from
-it.
+versioned-manifest CAS for sequence reservation, the pinned table
+schema and the live table directory, the advisory writer lock for
+local file moves — is built from it.
 
 Concretely, ``Database`` commits metadata as immutable versioned
 manifests ``_psweep_meta.v{N}.json``: a writer reads the highest

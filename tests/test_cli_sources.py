@@ -212,7 +212,7 @@ def test_database_compact_reduces_files(spark, tmp_path):
     # fragment the layout: rewrite with excess parallelism → many tiny
     # files per _run_id partition (what thousands of appends produce)
     db._rewrite(db.load(spark).repartition(10))
-    before_files = len(glob.glob(calc + "/database/data/**/*.parquet",
+    before_files = len(glob.glob(db.data_path + "/**/*.parquet",
                                  recursive=True))
     assert before_files > 5
     after_files = db.compact(spark, target_file_mb=128)

@@ -3,15 +3,17 @@ and must return what a ``mergeSchema`` read of the same files returns —
 names, types and field metadata — with ``_run_id`` last, and reading
 the table's metadata runs no Spark job."""
 
+import glob
 import os
 import threading
+import time
 import uuid
 
 import numpy as np
 import pytest
 
 from psweep_spark import Database, pgrid, plist, run
-from psweep_spark.database import SCHEMA_PREFIX
+from psweep_spark.database import DATA_DIR_KEY, SCHEMA_PREFIX
 from psweep_spark.metastore import InMemoryConditionalStore
 from psweep_spark.objects import pickled_cols
 
@@ -236,3 +238,125 @@ def test_update_meta_reapplies_mutate_after_lost_race(tmp_path):
     assert seen == [{}, {"rival": 1}]
     assert db.read_meta() == {"rival": 1, "mine": 1}
     assert db._meta_version() == 1
+
+
+def _widen(spark, calc_dir):
+    """Two plain rows, then a run that adds pset column ``b``: a
+    rewrite.  The database handle."""
+    run(spark, func_a, pgrid([plist("a", [1, 2])]), calc_dir=calc_dir)
+    run(spark, func_a, pgrid([plist("a", [3]), plist("b", [5])]),
+        calc_dir=calc_dir)
+    return _db(calc_dir)
+
+
+def test_never_rewritten_db_keeps_data_layout(spark, calc_dir):
+    """Plain appends keep ``data/_run_id=*/part-*.parquet`` (the layout
+    a DuckDB ``data/*/*.parquet`` glob reads) and name no directory."""
+    run(spark, func_a, pgrid([plist("a", [1, 2])]), calc_dir=calc_dir)
+    run(spark, func_a, pgrid([plist("a", [3])]), calc_dir=calc_dir)
+    db = _db(calc_dir)
+    data = os.path.join(db.path, "data")
+    assert db.data_path == data
+    assert DATA_DIR_KEY not in db.read_meta()
+    assert all(n.startswith("_run_id=") for n in os.listdir(data))
+    parts = glob.glob(os.path.join(data, "_run_id=*", "part-*.parquet"))
+    assert sorted(parts) == sorted(glob.glob(os.path.join(data, "*", "*.parquet")))
+    assert len({os.path.dirname(p) for p in parts}) == 2
+
+
+def test_rewrite_publishes_directory_and_schema_in_one_version(spark, calc_dir):
+    db = _widen(spark, calc_dir)
+    v = db._meta_version()
+    before, after = db._read_version(v - 1), db._read_version(v)
+    assert DATA_DIR_KEY not in before
+    assert "b" not in db.pinned_schema(before).names
+    assert after[DATA_DIR_KEY].startswith("data.")
+    assert "b" in db.pinned_schema(after).names
+    assert db.data_path == os.path.join(db.path, after[DATA_DIR_KEY])
+    assert db.load(spark).count() == 3
+
+
+def test_load_during_rewrites_sees_whole_table(spark, calc_dir):
+    """A reader looping load().count() while a widening append and
+    then compact() replace the table never gets None, an error, or
+    fewer rows than were committed before its read started."""
+    run(spark, func_a, pgrid([plist("a", [1, 2, 3, 4])]), calc_dir=calc_dir)
+    db = _db(calc_dir)
+    committed = [4]
+    counts, bad = [], []
+    done = threading.Event()
+
+    def reader():
+        while not done.is_set():
+            floor = committed[0]
+            try:
+                df = db.load(spark)
+                n = None if df is None else df.count()
+            except Exception as e:  # noqa: BLE001
+                bad.append(repr(e))
+                continue
+            counts.append(n)
+            if n is None or n < floor:
+                bad.append((floor, n))
+
+    t = threading.Thread(target=reader)
+    t.start()
+    try:
+        run(spark, func_a, pgrid([plist("a", [5]), plist("b", [1])]),
+            calc_dir=calc_dir)
+        committed[0] = 5
+        db.compact(spark)
+        time.sleep(0.5)  # a few reads of the compacted table
+    finally:
+        done.set()
+        t.join(timeout=300)
+    assert not t.is_alive()
+    assert not bad, bad
+    assert len(counts) >= 3 and counts[-1] == 5, counts
+    assert db.data_path != os.path.join(db.path, "data")
+
+
+def test_vacuum_removes_retired_directory_once_aged(spark, calc_dir):
+    db = _widen(spark, calc_dir)
+    live, retired = db.data_path, os.path.join(db.path, "data")
+    assert live != retired and os.path.isdir(retired)
+    assert db.vacuum(max_age_s=3600) == []
+    aged = time.time() - 7200
+    for d in (live, retired):
+        os.utime(d, (aged, aged))
+    assert db.vacuum(max_age_s=3600) == [retired]
+    assert not os.path.exists(retired) and os.path.isdir(live)
+    assert db.load(spark).count() == 3
+
+
+@pytest.mark.parametrize("store", ["local", "object_store"])
+def test_backup_and_clone_of_rewritten_db(spark, calc_dir, tmp_path,
+                                          monkeypatch, store):
+    """Copies of a rewritten DB load the same rows: the live-directory
+    key is relative to the DB root, and a store that does not live in
+    the DB directory gets the current manifest."""
+    db_path = os.path.join(calc_dir, "database")
+    copy_paths = [db_path + ".bak_t", str(tmp_path / "clone")]
+    if store == "object_store":
+        for p in [db_path] + copy_paths:
+            InMemoryConditionalStore.reset_namespace(p)
+        monkeypatch.setattr(
+            Database, "default_store_factory",
+            staticmethod(InMemoryConditionalStore.for_namespace),
+        )
+    db = _widen(spark, calc_dir)
+
+    def rows(d):
+        return sorted(
+            tuple(r) for r in d.load(spark).select("a", "b", "_pset_hash").collect()
+        )
+
+    want = rows(db)
+    copies = [Database(db.backup("t")), db.clone_to(copy_paths[1])]
+    assert [c.path for c in copies] == copy_paths
+    for copy in copies:
+        assert copy.read_meta()[DATA_DIR_KEY] == db.read_meta()[DATA_DIR_KEY]
+        assert copy.data_path.startswith(copy.path + os.sep)
+        assert rows(copy) == want
+    for p in [db_path] + copy_paths:
+        InMemoryConditionalStore.reset_namespace(p)

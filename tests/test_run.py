@@ -935,48 +935,6 @@ def test_rehash_projection_only_no_exchange(spark, calc_dir):
     assert row["_pset_hash"] == pset_hash({"a": 3, "b": 1, "c": None})
 
 
-def test_load_waits_out_rewrite_window(spark, calc_dir):
-    """ADVICE r10 #1: Database._rewrite commits via two renames
-    (data → data.old, data.rewrite → data); between them data/ is
-    absent.  A concurrent load() in that window must wait it out and
-    read the (new) table — not silently report 'empty', which would
-    make a racing skip-dups run re-execute every pset."""
-    import threading
-
-    run(spark, func_a, pgrid([plist("a", [1, 2, 3, 4])]), calc_dir=calc_dir)
-    db = Database(os.path.join(calc_dir, "database"))
-
-    # simulate mid-swap: data/ renamed away, swap marker present
-    os.rename(db.data_path, db.data_path + ".old")
-
-    def finish_swap():
-        os.rename(db.data_path + ".old", db.data_path)
-
-    t = threading.Timer(0.4, finish_swap)
-    t.start()
-    try:
-        df = db.load(spark)  # enters during the window
-        assert df is not None, "load() saw a phantom-empty table mid-swap"
-        assert df.count() == 4
-    finally:
-        t.join()
-
-    # give-up path: a marker that never resolves within the budget is
-    # reported as absent, not an infinite wait
-    os.rename(db.data_path, db.data_path + ".rewrite")
-    db.rewrite_wait_s = 0.3
-    try:
-        assert db.load(spark) is None
-    finally:
-        os.rename(db.data_path + ".rewrite", db.data_path)
-
-    # no markers + no data = genuinely empty, returns immediately
-    empty = Database(os.path.join(calc_dir, "no_such_db"))
-    t0 = __import__("time").monotonic()
-    assert empty.load(spark) is None
-    assert __import__("time").monotonic() - t0 < 1.0
-
-
 def test_atomic_artifact_write(tmp_path, monkeypatch):
     """ADVICE r10 #5: per-pset artifact files (logs.txt, tmpsave .pk)
     are committed via unique-temp + os.replace so a retried or
