@@ -516,7 +516,9 @@ class Database:
     # -- snapshots (reference `backup`, psweep.py:1417-1427) ------------------
 
     def backup(self, tag: str) -> str:
-        """Copy the table to a sibling snapshot dir.
+        """Snapshot the table into the sibling DB ``<path>.bak_<tag>``
+        (:meth:`_copy_to`: the live directory and the current manifest,
+        so the snapshot holds the table once).
 
         Local-FS stand-in for table versioning (Delta time travel /
         Iceberg snapshots are the cluster-scale mechanism — no copy).
@@ -535,15 +537,25 @@ class Database:
         return dst
 
     def _copy_to(self, dst_path: str) -> None:
-        """Copy the DB directory.  A store that does not live in it
-        gets the current manifest and its schema, so the copy names the
-        same live directory (not a retired one)."""
-        shutil.copytree(self.path, dst_path)
+        """Make ``dst_path`` a DB holding what the current manifest
+        names: the live directory, copied at its path relative to the
+        DB root, then that manifest and the schema it pins, committed
+        through the copy's own store.  Directories retired by a
+        rewrite, ``data.staging-*`` debris, the writer lock and older
+        manifest versions (which name directories not copied) stay
+        behind."""
         meta, dst = self.read_meta(), Database(dst_path)
-        if dst.read_meta() != meta:
-            if "schema" in meta:
-                raw = self.meta_store.get(meta["schema"])
-                dst.meta_store.put_if_absent(meta["schema"], raw)
+        live = self._live_dir(meta)
+        os.makedirs(dst.path)
+        if os.path.isdir(live):
+            shutil.copytree(
+                live, os.path.join(dst.path, os.path.relpath(live, self.path))
+            )
+        if "schema" in meta:
+            dst.meta_store.put_if_absent(
+                meta["schema"], self.meta_store.get(meta["schema"])
+            )
+        if meta:
             dst.update_meta(lambda _: meta)
 
     # -- maintenance ---------------------------------------------------------

@@ -5,22 +5,29 @@ re-expressed in Spark:
 
     grid
       → hash stamp  (JVM-side canonical sha256, hashing.hash_expr)
-      → skip-dups anti-join against DB hashes      (#11/#20)
+      → skip-dups against DB hashes                (#11/#20)
       → id/seq stamping (_run_id/_pset_id/_run_seq/_pset_seq) (#18)
       → mapInPandas(func)  — executors replace mp.Pool AND Dask (#15-17)
       → append to Parquet DB with schema evolution (#21/#28)
 
 A lazy ``DataFrame`` grid (the 10⁹-row scale path) runs this as one
-distributed plan; before the write only a bounded ``take`` (emptiness
-check + schema probe) and a ``max(__order)`` agg (seq slot span)
-execute it.  An eager list-of-dicts grid is already on the driver and
-stays there: under skip-dups against an existing DB its single
-pre-write job collects the anti-join's survivors as
-``(__order, _pset_hash)`` (the DB hash set is anti-joined in Spark,
-never collected); the probe rows come from the typed rows, and
-``_pset_seq`` is stamped from the survivors' submission order, so the
-write plan holds no anti-join, no DB scan and no window, and runs as
-one task (one file per run) unless ``poolsize`` is set.
+distributed plan, skip-dups as a left-anti join against the DB hash
+set (:func:`skip_dups_anti_join`); before the write only a bounded
+``take`` (emptiness check + schema probe) and a ``max(__order)`` agg
+(seq slot span) execute it.  An eager list-of-dicts grid is already on
+the driver and stays there, as an Arrow ``LocalRelation``
+(:func:`_local_df`, also behind :func:`prepare_params_df`).  Under
+skip-dups against an existing DB, the grid's hashes are collected
+(no job for a JVM-hashable grid) and one probe returns the DB hashes
+among them: a left-semi join of the DB's ``_pset_hash`` column against
+the broadcast grid hashes (two jobs: the broadcast, then the DB scan),
+so the DB streams and there is no shuffle and no ``distinct()``.  The
+rows whose hash is absent are rebuilt into the write input through
+:func:`_local_df`; the probe rows
+come from the typed rows, and ``_pset_seq`` is stamped from the kept
+rows' submission order, so the write plan holds no join, no DB scan
+and no window, and runs as one task (one file per run) unless
+``poolsize`` is set.
 
 Retry idempotence (SURVEY §4b): ``_pset_id`` is **UUIDv5 of
 (run_id, pset_seq)**, not a random UUID4 — a re-executed Spark task
@@ -113,9 +120,11 @@ from collections.abc import Callable, Sequence
 from contextlib import contextmanager, redirect_stderr, redirect_stdout
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .database import Database
 from .hashing import df_hash_expr, filter_cols, pset_hash
@@ -287,6 +296,31 @@ def _typed_rows(
     return schema, [tuple(_cell(p, f) for f in schema.fields) for p in params]
 
 
+def _local_df(
+    spark: SparkSession, schema: T.StructType, rows: list[tuple]
+) -> DataFrame:
+    """Typed tuples → DataFrame through one ``pyarrow.Table``.
+
+    Spark keeps a table under ``spark.sql.execution.arrow.
+    localRelationThreshold`` as a JVM-side ``LocalRelation`` (no RDD,
+    so a projection of it collects with no job) and falls back to an
+    RDD of Arrow batches above it.  The cells go through
+    ``schema.toInternal`` first, as a list of rows does in Spark's own
+    ``createDataFrame``: a naive ``datetime`` is read as driver-local
+    time, an aware one by its offset, at any nesting depth.  Field
+    metadata travels with ``schema``."""
+    arrow_schema = to_arrow_schema(schema)
+    internal = [schema.toInternal(r) for r in rows]
+    table = pa.Table.from_arrays(
+        [
+            pa.array([r[i] for r in internal], type=f.type)
+            for i, f in enumerate(arrow_schema)
+        ],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def prepare_params_df(
     spark: SparkSession,
     params: Sequence[dict] | DataFrame,
@@ -296,7 +330,7 @@ def prepare_params_df(
     if isinstance(params, DataFrame):
         return params
     schema, rows = _typed_rows(params, pickle_objects=pickle_objects)
-    return spark.createDataFrame(rows, schema)
+    return _local_df(spark, schema, rows)
 
 
 # ---------------------------------------------------------------------------
@@ -722,8 +756,10 @@ def git_exit(use_git: bool, run_id: str, cwd: str = ".") -> None:
 
 
 def skip_dups_anti_join(params_df: DataFrame, hashes: DataFrame) -> DataFrame:
-    """The skip-dups stage of :func:`run`: drop every grid row whose
-    ``_pset_hash`` already exists in the DB hash relation.
+    """The skip-dups stage of :func:`run` for a lazy ``DataFrame``
+    grid: drop every grid row whose ``_pset_hash`` already exists in
+    the DB hash relation.  An eager grid, bounded by the driver, probes
+    the other way round instead (:func:`_eager_params_df`).
 
     Scale shape: a LEFT ANTI join where the GRID side streams (it may
     be a lazy 10⁹-row cross product that must never shuffle wholesale
@@ -758,35 +794,43 @@ def _eager_params_df(
     """Eager grid → (params DataFrame with ``__order`` + ``_pset_hash``,
     the typed rows it holds, in submission order).
 
-    The grid is already a list on the driver, so it stays there: at
-    most ONE Spark job runs before the write.  Under skip-dups against
-    an existing DB, the grid is hashed and anti-joined in Spark (the DB
-    hash set is never collected) and only the survivors'
-    ``(__order, _pset_hash)`` pairs come back; the write input is then
-    rebuilt from the kept rows, so its plan has no anti-join, no DB
-    scan and no window.  Without skip-dups nothing runs here and the
-    hash is stamped inside the write."""
+    The grid is already a list on the driver, so it stays there, as an
+    Arrow ``LocalRelation`` (:func:`_local_df`).  Without skip-dups, or
+    against an empty DB, nothing runs here and the hash is stamped
+    inside the write.  Otherwise the grid's ``(__order, _pset_hash)``
+    pairs are collected (no job for a JVM-hashable grid under Spark's
+    local-relation threshold), and one probe asks the DB which of
+    those hashes it holds: a left-semi join of the DB's ``_pset_hash``
+    column against the broadcast grid hashes (two jobs: the broadcast,
+    then the DB scan).  The DB side streams and the build side is
+    bounded by the grid, not the history, so the probe runs no shuffle
+    and no ``distinct()``.  The rows whose hash is absent are rebuilt
+    into the write input with contiguous ``__order`` in submission
+    order (a repeat inside the grid keeps every copy), so the write
+    plan holds no join, no DB scan and no window."""
     order_schema = T.StructType(
         schema.fields + [T.StructField("__order", T.LongType(), False)]
     )
-    grid = spark.createDataFrame(
-        [r + (i,) for i, r in enumerate(rows)], order_schema
-    )
+    grid = _local_df(spark, order_schema, [r + (i,) for i, r in enumerate(rows)])
     grid = grid.withColumn("_pset_hash", df_hash_expr(grid.schema, pset_cols))
-    if not (skip_dups and db.exists()):
+    stored_df = db.load(spark) if skip_dups else None
+    if stored_df is None:
         return grid, rows
-    kept = sorted(
-        tuple(r)
-        for r in skip_dups_anti_join(grid, db.distinct_hashes(spark))
-        .select("__order", "_pset_hash")
+    hashes = sorted(tuple(r) for r in grid.select("__order", "_pset_hash").collect())
+    stored = {
+        r[0]
+        for r in stored_df.select("_pset_hash")
+        .join(F.broadcast(grid.select("_pset_hash")), "_pset_hash", "left_semi")
         .collect()
-    )
+    }
+    kept = [(i, h) for i, h in hashes if h not in stored]
     rows = [rows[i] for i, _ in kept]
-    df = spark.createDataFrame(
-        [r + (j, h) for j, (r, (_, h)) in enumerate(zip(rows, kept))],
+    df = _local_df(
+        spark,
         T.StructType(
             order_schema.fields + [T.StructField("_pset_hash", T.StringType())]
         ),
+        [r + (j, h) for j, (r, (_, h)) in enumerate(zip(rows, kept))],
     )
     return df, rows
 

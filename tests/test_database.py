@@ -360,3 +360,25 @@ def test_backup_and_clone_of_rewritten_db(spark, calc_dir, tmp_path,
         assert rows(copy) == want
     for p in [db_path] + copy_paths:
         InMemoryConditionalStore.reset_namespace(p)
+
+
+def test_backup_and_clone_copy_only_live_directory(spark, calc_dir, tmp_path):
+    """After compact() the DB directory also holds the retired ``data``
+    directory and, from a crashed append, staging debris; a backup and
+    a clone copy only the live directory and the current manifest, and
+    load the same rows."""
+    run(spark, func_a, pgrid([plist("a", [1, 2])]), calc_dir=calc_dir)
+    run(spark, func_a, pgrid([plist("a", [3])]), calc_dir=calc_dir)
+    db = _db(calc_dir)
+    db.compact(spark)
+    os.makedirs(os.path.join(db.path, "data.staging-dead", "_run_id=x"))
+    live = os.path.basename(db.data_path)
+    assert {"data", "data.staging-dead", live} <= set(os.listdir(db.path))
+    want = sorted(tuple(r) for r in db.load(spark).collect())
+    for copy in (Database(db.backup("t")), db.clone_to(str(tmp_path / "clone"))):
+        assert copy.data_path == os.path.join(copy.path, live)
+        names = os.listdir(copy.path)
+        assert [n for n in names if n.startswith("data")] == [live], names
+        assert not [n for n in names if n.startswith(".writer_lock")], names
+        assert len(copy.meta_store.list_keys("_psweep_meta.v")) == 1
+        assert sorted(tuple(r) for r in copy.load(spark).collect()) == want

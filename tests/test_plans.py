@@ -85,9 +85,12 @@ def test_brute_force_topk_broadcasts_queries(spark):
 
 
 def test_skip_dups_is_join_not_collect(spark, tmp_path):
-    """skip_dups must plan as an anti-join against the DB hash relation —
-    never a driver-side collected filter.  An eager run() collects only
-    the grid's survivors of this join, never the DB hashes."""
+    """A lazy (DataFrame) grid's skip_dups must plan as an anti-join
+    against the DB hash relation — never a driver-side collected
+    filter.  An eager run() collects the grid's own hashes and, from a
+    left-semi join against them, only the DB hashes the grid holds,
+    never the whole DB hash set (tests/test_run.py::
+    test_eager_skip_dups_probe_plan)."""
     from psweep_spark import plist, run
 
     calc = str(tmp_path / "calc")
