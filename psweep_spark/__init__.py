@@ -5,8 +5,10 @@ engine with the capabilities of elcorto/psweep (reference read-only at
 * grid DSL (plist/pgrid/stargrid/...) — eager list API for reference
   parity + lazy DataFrame builders for 10^9-row grids
 * canonical sha256 pset hash as a Catalyst expression (no UDF hot path)
-* ``run()``: grid → skip-dups anti-join → id stamping → mapInPandas(func)
-  → Parquet append with union-of-keys schema evolution
+* ``run()``: grid → skip-dups probe → id stamping → func, serially on
+  the driver for an eager grid without ``poolsize``, else in a
+  mapInPandas stage of ``poolsize`` tasks → Parquet append with
+  union-of-keys schema evolution
 * query surface (+ full Spark SQL passthrough) and LLM-data-pipeline
   operators (dedup, similarity search, text analysis) under
   ``psweep_spark.operators``

@@ -7,7 +7,9 @@ re-expressed in Spark:
       → hash stamp  (JVM-side canonical sha256, hashing.hash_expr)
       → skip-dups against DB hashes                (#11/#20)
       → id/seq stamping (_run_id/_pset_id/_run_seq/_pset_seq) (#18)
-      → mapInPandas(func)  — executors replace mp.Pool AND Dask (#15-17)
+      → func on every pset: serially on the driver, as the reference
+        does without a pool, or in ``poolsize`` executor tasks of one
+        mapInPandas stage, which replace mp.Pool AND Dask (#15-17)
       → append to Parquet DB with schema evolution (#21/#28)
 
 A lazy ``DataFrame`` grid (the 10⁹-row scale path) runs this as one
@@ -15,19 +17,21 @@ distributed plan, skip-dups as a left-anti join against the DB hash
 set (:func:`skip_dups_anti_join`); before the write only a bounded
 ``take`` (emptiness check + schema probe) and a ``max(__order)`` agg
 (seq slot span) execute it.  An eager list-of-dicts grid is already on
-the driver and stays there, as an Arrow ``LocalRelation``
-(:func:`_local_df`, also behind :func:`prepare_params_df`).  Under
-skip-dups against an existing DB, the grid's hashes are collected
-(no job for a JVM-hashable grid) and one probe returns the DB hashes
-among them: a left-semi join of the DB's ``_pset_hash`` column against
-the broadcast grid hashes (two jobs: the broadcast, then the DB scan),
-so the DB streams and there is no shuffle and no ``distinct()``.  The
-rows whose hash is absent are rebuilt into the write input through
-:func:`_local_df`; the probe rows
-come from the typed rows, and ``_pset_seq`` is stamped from the kept
-rows' submission order, so the write plan holds no join, no DB scan
-and no window, and runs as one task (one file per run) unless
-``poolsize`` is set.
+the driver and stays there (:func:`_eager_hashes`): it becomes an
+Arrow ``LocalRelation`` (:func:`_local_df`, also behind
+:func:`prepare_params_df`) only for the JVM hash, and its hashes are
+collected (no job for a JVM-hashable grid).  Under skip-dups against
+an existing DB one probe returns the DB hashes among them: a left-semi
+join of the DB's ``_pset_hash`` column against the broadcast grid
+hashes (two jobs: the broadcast, then the DB scan), so the DB streams
+and there is no shuffle and no ``distinct()``.  The kept psets' ids
+are stamped in Python, ``_pset_seq`` from their submission order.
+Without ``poolsize`` (and without ``func_pandas``)
+:func:`_run_on_driver` calls ``func`` on each on the driver and the
+results become one ``LocalRelation``: the write is one task (one file
+per run) with no Python-worker stage.  With ``poolsize`` or
+``func_pandas`` the stamped rows become a ``LocalRelation`` that runs
+in the executor stage like a lazy grid: ``poolsize`` tasks, else one.
 
 Retry idempotence (SURVEY §4b): ``_pset_id`` is **UUIDv5 of
 (run_id, pset_seq)**, not a random UUID4 — a re-executed Spark task
@@ -49,13 +53,16 @@ in the reference:
 * it merges the result back, sets ``_pset_runtime`` (wall-clock
   seconds), and under ``tmpsave`` pickles the completed pset.
 
-Its callers: the executor-side row mapper (once per pset), the
-driver-side schema probe (with artifact writes off, on the same record
-an executor passes, placeholder ids included), and the public
+Its callers: the driver path (:func:`_run_on_driver`, once per pset),
+the executor-side row mapper (once per pset), the driver-side schema
+probe of the executor path (with artifact writes off, on the same
+record an executor passes, placeholder ids included), and the public
 ``util.func_wrapper`` / ``util.capture_logs_wrapper``, which are thin
-calls into it.  The ``logs.txt`` and tmpsave files are written by one
-writer each (:func:`_write_logs`, :func:`_write_tmpsave`), both
-through :func:`_atomic_write`.  ``simulate=True`` clones the DB to
+calls into it.  Capture redirects the process-global stdout/stderr, so
+one capture runs at a time per process (:func:`_captured`).  The
+``logs.txt`` and tmpsave files are written by one writer each
+(:func:`_write_logs`, :func:`_write_tmpsave`), both through
+:func:`_atomic_write`.  ``simulate=True`` clones the DB to
 ``<calc_dir>.simulate`` and runs the whole pipeline with ``func``
 skipped (psweep.py:1279-1292).
 
@@ -110,14 +117,17 @@ from __future__ import annotations
 
 import datetime as _dt
 import io
+import itertools
 import os
 import pickle
 import socket
+import threading
 import time
 import traceback
 import uuid
 from collections.abc import Callable, Sequence
 from contextlib import contextmanager, redirect_stderr, redirect_stdout
+from zoneinfo import ZoneInfo
 
 import numpy as np
 import pyarrow as pa
@@ -255,7 +265,10 @@ def infer_schema(
     return T.StructType(fields)
 
 
-def _to_row_value(v, dt: T.DataType):
+def _to_row_value(v, dt: T.DataType, tz: _dt.tzinfo | None = None):
+    """One cell typed for ``dt``.  A naive ``datetime`` in a timestamp
+    field is wall time in ``tz`` when given, else driver-local time (as
+    ``toInternal`` reads it)."""
     if v is None or (isinstance(v, float) and np.isnan(v) and not isinstance(dt, T.DoubleType)):
         return None
     if isinstance(dt, T.BooleanType):
@@ -270,9 +283,11 @@ def _to_row_value(v, dt: T.DataType):
         seq = v.tolist() if isinstance(v, np.ndarray) else (
             sorted(v, key=repr) if isinstance(v, set) else list(v)
         )
-        return [_to_row_value(x, dt.elementType) for x in seq]
+        return [_to_row_value(x, dt.elementType, tz) for x in seq]
     if isinstance(dt, T.BinaryType):
         return bytes(v)
+    if tz is not None and isinstance(v, _dt.datetime) and v.tzinfo is None:
+        return v.replace(tzinfo=tz)
     return v
 
 
@@ -411,13 +426,20 @@ def _write_tmpsave(pset: dict) -> None:
     _atomic_write(os.path.join(d, f"{pset['_pset_id']}.pk"), pickle.dumps(pset))
 
 
+#: held while a capture buffer is active: ``sys.stdout``/``sys.stderr``
+#: are process-global, so two driver threads capturing at once would
+#: swap their output
+_CAPTURE_LOCK = threading.RLock()
+
+
 @contextmanager
 def _captured(buf: io.StringIO | None):
-    """Redirect stdout and stderr into ``buf``; a no-op for None."""
+    """Redirect stdout and stderr into ``buf``, one buffer at a time per
+    process (:data:`_CAPTURE_LOCK`); a no-op for None."""
     if buf is None:
         yield
         return
-    with redirect_stdout(buf), redirect_stderr(buf):
+    with _CAPTURE_LOCK, redirect_stdout(buf), redirect_stderr(buf):
         yield
 
 
@@ -759,7 +781,7 @@ def skip_dups_anti_join(params_df: DataFrame, hashes: DataFrame) -> DataFrame:
     """The skip-dups stage of :func:`run` for a lazy ``DataFrame``
     grid: drop every grid row whose ``_pset_hash`` already exists in
     the DB hash relation.  An eager grid, bounded by the driver, probes
-    the other way round instead (:func:`_eager_params_df`).
+    the other way round instead (:func:`_eager_hashes`).
 
     Scale shape: a LEFT ANTI join where the GRID side streams (it may
     be a lazy 10⁹-row cross product that must never shuffle wholesale
@@ -783,56 +805,46 @@ def skip_dups_anti_join(params_df: DataFrame, hashes: DataFrame) -> DataFrame:
     )
 
 
-def _eager_params_df(
+def _eager_hashes(
     spark: SparkSession,
     db: Database,
     schema: T.StructType,
     rows: list[tuple],
     pset_cols: list[str],
     skip_dups: bool,
-) -> tuple[DataFrame, list[tuple]]:
-    """Eager grid → (params DataFrame with ``__order`` + ``_pset_hash``,
-    the typed rows it holds, in submission order).
+) -> tuple[list[tuple], list[str]]:
+    """Eager grid → (the typed rows to run, their ``_pset_hash``), in
+    submission order.
 
-    The grid is already a list on the driver, so it stays there, as an
-    Arrow ``LocalRelation`` (:func:`_local_df`).  Without skip-dups, or
-    against an empty DB, nothing runs here and the hash is stamped
-    inside the write.  Otherwise the grid's ``(__order, _pset_hash)``
+    The grid is already a list on the driver, so it stays there: it
+    becomes an Arrow ``LocalRelation`` (:func:`_local_df`) only so that
+    the JVM hash expression stamps it, and its ``(__order, _pset_hash)``
     pairs are collected (no job for a JVM-hashable grid under Spark's
-    local-relation threshold), and one probe asks the DB which of
-    those hashes it holds: a left-semi join of the DB's ``_pset_hash``
-    column against the broadcast grid hashes (two jobs: the broadcast,
-    then the DB scan).  The DB side streams and the build side is
-    bounded by the grid, not the history, so the probe runs no shuffle
-    and no ``distinct()``.  The rows whose hash is absent are rebuilt
-    into the write input with contiguous ``__order`` in submission
-    order (a repeat inside the grid keeps every copy), so the write
-    plan holds no join, no DB scan and no window."""
+    local-relation threshold).  Under skip-dups against an existing DB,
+    one probe asks the DB which of those hashes it holds: a left-semi
+    join of the DB's ``_pset_hash`` column against the broadcast grid
+    hashes (two jobs: the broadcast, then the DB scan).  The DB side
+    streams and the build side is bounded by the grid, not the history,
+    so the probe runs no shuffle and no ``distinct()``.  The rows whose
+    hash the DB holds are dropped; a repeat inside the grid keeps every
+    copy."""
     order_schema = T.StructType(
         schema.fields + [T.StructField("__order", T.LongType(), False)]
     )
     grid = _local_df(spark, order_schema, [r + (i,) for i, r in enumerate(rows)])
     grid = grid.withColumn("_pset_hash", df_hash_expr(grid.schema, pset_cols))
+    hashes = [h for _, h in sorted(grid.select("__order", "_pset_hash").collect())]
     stored_df = db.load(spark) if skip_dups else None
     if stored_df is None:
-        return grid, rows
-    hashes = sorted(tuple(r) for r in grid.select("__order", "_pset_hash").collect())
+        return rows, hashes
     stored = {
         r[0]
         for r in stored_df.select("_pset_hash")
         .join(F.broadcast(grid.select("_pset_hash")), "_pset_hash", "left_semi")
         .collect()
     }
-    kept = [(i, h) for i, h in hashes if h not in stored]
-    rows = [rows[i] for i, _ in kept]
-    df = _local_df(
-        spark,
-        T.StructType(
-            order_schema.fields + [T.StructField("_pset_hash", T.StringType())]
-        ),
-        [r + (j, h) for j, (r, (_, h)) in enumerate(zip(rows, kept))],
-    )
-    return df, rows
+    kept = [i for i, h in enumerate(hashes) if h not in stored]
+    return [rows[i] for i in kept], [hashes[i] for i in kept]
 
 
 def _spark_rows(
@@ -894,6 +906,124 @@ def _probe_results(
     return {}
 
 
+#: the ids run() stamps on every pset, in stored column order
+_META_FIELDS = [
+    ("_pset_hash", T.StringType()),
+    ("_run_id", T.StringType()),
+    ("_run_seq", T.LongType()),
+    ("_pset_seq", T.LongType()),
+    ("_pset_id", T.StringType()),
+    ("_calc_dir", T.StringType()),
+]
+
+
+def _out_schema(
+    in_schema: T.StructType,
+    res_fields: list[T.StructField],
+    stamp_fields: list[tuple[str, T.DataType]],
+) -> T.StructType:
+    """Stored columns: the input, then the new result columns, then the
+    executor's stamps."""
+    out = list(in_schema.fields)
+    out += [f for f in res_fields if f.name not in in_schema.names]
+    have = {f.name for f in out}
+    out += [T.StructField(n, dt, True) for n, dt in stamp_fields if n not in have]
+    return T.StructType(out)
+
+
+def _session_tz(spark: SparkSession) -> _dt.tzinfo:
+    """The session time zone: where mapInPandas's Arrow conversion puts
+    the wall time of a naive ``datetime``."""
+    name = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        return ZoneInfo(name)
+    except (KeyError, ValueError):  # a fixed offset such as "+02:00"
+        import pandas as pd
+
+        return pd.Timestamp(0, tz=name).tzinfo
+
+
+def _wall(v, tz: _dt.tzinfo):
+    """A naive driver-local ``datetime`` (what ``fromInternal`` returns),
+    also inside a list → the naive wall time of the same instant in
+    ``tz``."""
+    if isinstance(v, _dt.datetime):
+        return v.astimezone(tz).replace(tzinfo=None)
+    if isinstance(v, list):
+        return [_wall(x, tz) for x in v]
+    return v
+
+
+def _run_on_driver(
+    spark: SparkSession,
+    func: Callable[[dict], dict],
+    in_schema: T.StructType,
+    rows: list[tuple],
+    res_fields: list[T.StructField] | None,
+    stamp_fields: list[tuple[str, T.DataType]],
+    *,
+    capture_logs: str | None,
+    safe: bool,
+    tmpsave: bool,
+    simulate: bool,
+    pickle_objects: bool,
+) -> DataFrame:
+    """``func`` on every stamped pset row, serially on the driver, as the
+    reference runs ``poolsize=None`` (``list(map(func, params))``,
+    psweep.py:1465-1466); the results as one ``LocalRelation``.
+
+    Each pset's record is its row as ``take()`` returns it
+    (:func:`_spark_rows`), and it goes through :func:`_exec_pset` once.
+    The result columns are ``res_fields``, or else the union of the
+    result dicts' keys (:func:`infer_schema`, the reference's
+    union-of-keys).
+
+    Timestamps follow mapInPandas's Arrow conversion, so this path and
+    the executor path store the same rows: ``func`` sees a naive
+    ``datetime`` as wall time in the session time zone, and a naive
+    ``datetime`` in a stored cell (a result, ``_time_utc``) is read in
+    that zone."""
+    tz = _session_tz(spark)
+    ts_cols = [f.name for f in in_schema.fields if "timestamp" in f.dataType.simpleString()]
+    psets = []
+    for row in _spark_rows(in_schema, in_schema.names, rows):
+        rec = row.asDict(recursive=True)
+        for c in ts_cols:
+            rec[c] = _wall(rec[c], tz)
+        psets.append(_exec_pset(
+            _live(rec), func, capture_logs=capture_logs, safe=safe,
+            tmpsave=tmpsave and not simulate, simulate=simulate,
+        ))
+
+    if res_fields is None:
+        # the executor path's 8-row schema probe refuses the same grids
+        if safe and len(psets) >= 8 and all(p["_failed"] for p in psets):
+            raise ValueError(
+                f"all {len(psets)} psets failed under safe=True, so their "
+                "result columns are unknown; pass result_schema= explicitly"
+            )
+        known = set(in_schema.names) | {n for n, _ in stamp_fields}
+        res_fields = infer_schema(
+            [{k: v for k, v in p.items() if k not in known} for p in psets],
+            pickle_objects=pickle_objects,
+        ).fields
+    out_schema = _out_schema(in_schema, res_fields, stamp_fields)
+    pkl = pickled_cols(out_schema)
+    pos = {c: i for i, c in enumerate(in_schema.names)}
+
+    def cell(pset: dict, row: tuple, f: T.StructField):
+        v = pset.get(f.name)
+        if f.name in pkl and v is not None:
+            # a pickled param keeps its original framed bytes, which
+            # _pset_hash was computed over; results are framed fresh
+            orig = row[pos[f.name]] if f.name in pos else None
+            return obj_to_bytes(v) if orig is None else orig
+        return _to_row_value(v, f.dataType, tz)
+
+    out = [tuple(cell(p, r, f) for f in out_schema.fields) for p, r in zip(psets, rows)]
+    return _local_df(spark, out_schema, out).coalesce(1)
+
+
 # ---------------------------------------------------------------------------
 # run()
 # ---------------------------------------------------------------------------
@@ -923,15 +1053,33 @@ def run(
 ) -> DataFrame:
     """Dispatch ``func`` over every pset; append results to the DB.
 
+    Where ``func`` runs follows the reference's ``poolsize``:
+
+    * an eager (list-of-dicts) grid without ``poolsize`` runs serially
+      on the driver, one ``func`` call per pset (the reference's
+      ``list(map(func, params))``), and its results are written as one
+      ``LocalRelation`` (:func:`_run_on_driver`);
+    * ``poolsize=N`` runs ``func`` in N executor tasks of one
+      ``mapInPandas`` stage, one parquet file each;
+    * a lazy ``DataFrame`` grid runs in the executor stage too, with
+      the grid's own partitioning unless ``poolsize`` is set.
+
     ``func_pandas`` (mutually compatible with ``func`` — when both are
     given, ``func`` is used only for the schema probe and must agree
     with ``func_pandas``) switches the executor stage to the vectorized
-    batch contract documented in the module docstring.
+    batch contract documented in the module docstring; an eager grid
+    then runs as one executor task unless ``poolsize`` is set.
 
-    Returns the full accumulated database as a (lazy) DataFrame.
+    Returns the full accumulated database as a DataFrame.  With
+    ``save=False`` it is the loaded DB unioned with this run's rows:
+    those of a driver run are in memory, so ``func`` ran exactly once
+    per pset; those of an executor run stay a lazy plan, which runs
+    ``func`` again on every action.
     """
     if capture_logs not in (None, "db", "file", "db+file"):
         raise ValueError(f"capture_logs must be db|file|db+file, got {capture_logs!r}")
+    if func is None and func_pandas is None and not simulate and result_schema is None:
+        raise ValueError("func or func_pandas required unless simulate=True")
 
     git_enter(git, git_dir)
 
@@ -943,6 +1091,7 @@ def run(
     else:
         db = Database(database_dir or os.path.join(calc_dir, "database"))
     os.makedirs(calc_dir, exist_ok=True)
+    calc_dir = os.path.abspath(calc_dir)
 
     eager = not isinstance(params, DataFrame)
     if eager:
@@ -953,14 +1102,11 @@ def run(
     if not pset_cols:
         raise ValueError("params contain no pset (bare-named) columns")
 
-    # __order numbers the psets that reach the write; _pset_seq is
-    # pset_base + 1 + __order for both paths
+    # _pset_seq is pset_base + 1 + the pset's position among those that
+    # reach the write (__order, for a lazy grid)
     n_probe = 8 if safe else 1
     if eager:
-        params_df, rows = _eager_params_df(
-            spark, db, schema, rows, pset_cols, skip_dups
-        )
-        probe_rows = _spark_rows(schema, pset_cols, rows[:n_probe])
+        rows, hashes = _eager_hashes(spark, db, schema, rows, pset_cols, skip_dups)
         n_slots = len(rows)
     else:
         # scale path: a global row_number would single-partition the grid;
@@ -983,7 +1129,7 @@ def run(
 
     # skip_dups may have filtered everything → return DB unchanged
     # (reference: re-run of identical params appends 0 rows)
-    if not probe_rows:
+    if not n_slots:
         full = db.load(spark)
         if full is None:
             raise ValueError("empty params and empty database")
@@ -999,18 +1145,29 @@ def run(
     # two concurrent run() calls can never stamp colliding seqs even
     # though both compute and append in parallel
     run_seq, pset_base = db.reserve_seqs(spark, n_slots, peek=not save)
-    seq_col = (F.lit(pset_base + 1) + F.col("__order")).cast("long")
-
-    params_df = (
-        params_df.withColumn("_run_id", F.lit(run_id))
-        .withColumn("_run_seq", F.lit(run_seq).cast("long"))
-        .withColumn("_pset_seq", seq_col)
-        .withColumn(
-            "_pset_id", uuid5_expr(F.col("_run_id"), F.col("_pset_seq").cast("string"))
+    if eager:
+        # _pset_id = UUIDv5 of (run_id, _pset_seq), what uuid5_expr computes
+        in_schema = T.StructType(
+            schema.fields + [T.StructField(n, t) for n, t in _META_FIELDS]
         )
-        .withColumn("_calc_dir", F.lit(os.path.abspath(calc_dir)))
-        .drop("__order")
-    )
+        ns = uuid.UUID(run_id)
+        rows = [
+            r + (h, run_id, run_seq, seq, str(uuid.uuid5(ns, str(seq))), calc_dir)
+            for seq, r, h in zip(itertools.count(pset_base + 1), rows, hashes)
+        ]
+    else:
+        seq_col = (F.lit(pset_base + 1) + F.col("__order")).cast("long")
+        params_df = (
+            params_df.withColumn("_run_id", F.lit(run_id))
+            .withColumn("_run_seq", F.lit(run_seq).cast("long"))
+            .withColumn("_pset_seq", seq_col)
+            .withColumn(
+                "_pset_id",
+                uuid5_expr(F.col("_run_id"), F.col("_pset_seq").cast("string")),
+            )
+            .withColumn("_calc_dir", F.lit(calc_dir))
+            .drop("__order")
+        )
 
     # --- result schema ------------------------------------------------------
     stamp_fields = [
@@ -1022,48 +1179,53 @@ def run(
         stamp_fields += [("_failed", T.BooleanType()), ("_exc_txt", T.StringType())]
     if capture_logs and "db" in capture_logs:
         stamp_fields.append(("_logs", T.StringType()))
+    res_fields: list[T.StructField] | None = None  # None: inferred
     if simulate:
-        res_fields: list[T.StructField] = []
+        res_fields = []
     elif result_schema is not None:
         res_fields = list(result_schema.fields)
+
+    row_func = func if func is not None else (lambda p: {})
+    if eager and not poolsize and func_pandas is None:
+        result_df = _run_on_driver(
+            spark, row_func, in_schema, rows, res_fields, stamp_fields,
+            capture_logs=capture_logs, safe=safe, tmpsave=tmpsave,
+            simulate=simulate, pickle_objects=pickle_objects,
+        )
     else:
-        if func is None and func_pandas is None:
-            raise ValueError("func or func_pandas required unless simulate=True")
-        meta = {
-            "_pset_hash": "0" * 64,
-            "_run_id": run_id,
-            "_run_seq": run_seq,
-            "_pset_seq": pset_base + 1,
-            "_pset_id": "00000000-0000-5000-8000-000000000000",
-            "_calc_dir": os.path.abspath(calc_dir),
-        }
-        res = _probe_results(probe_rows, meta, func, func_pandas, safe)
-        res_fields = list(infer_schema([res], pickle_objects=pickle_objects).fields)
+        if eager:
+            params_df = _local_df(spark, in_schema, rows)
+            probe_rows = _spark_rows(in_schema, pset_cols, rows[:n_probe])
+        if res_fields is None:
+            meta = {
+                "_pset_hash": "0" * 64,
+                "_run_id": run_id,
+                "_run_seq": run_seq,
+                "_pset_seq": pset_base + 1,
+                "_pset_id": "00000000-0000-5000-8000-000000000000",
+                "_calc_dir": calc_dir,
+            }
+            res = _probe_results(probe_rows, meta, func, func_pandas, safe)
+            res_fields = list(infer_schema([res], pickle_objects=pickle_objects).fields)
+        out_schema = _out_schema(params_df.schema, res_fields, stamp_fields)
 
-    in_schema = params_df.schema
-    out_fields = list(in_schema.fields)
-    out_fields += [f for f in res_fields if f.name not in in_schema.names]
-    have = {f.name for f in out_fields}
-    out_fields += [T.StructField(n, dt, True) for n, dt in stamp_fields if n not in have]
-    out_schema = T.StructType(out_fields)
+        if poolsize:
+            params_df = params_df.repartition(poolsize)
+        elif eager:
+            # a human-sized grid: one task, so one parquet file per run
+            params_df = params_df.coalesce(1)
 
-    if poolsize:
-        params_df = params_df.repartition(poolsize)
-    elif eager:
-        # a human-sized grid: one task, so one parquet file per run
-        params_df = params_df.coalesce(1)
-
-    mapper = _make_mapper(
-        func if func is not None else (lambda p: {}),
-        out_schema,
-        calc_dir=os.path.abspath(calc_dir),
-        capture_logs=capture_logs,
-        safe=safe,
-        tmpsave=tmpsave,
-        simulate=simulate,
-        func_pandas=func_pandas,
-    )
-    result_df = params_df.mapInPandas(mapper, out_schema)
+        mapper = _make_mapper(
+            row_func,
+            out_schema,
+            calc_dir=calc_dir,
+            capture_logs=capture_logs,
+            safe=safe,
+            tmpsave=tmpsave,
+            simulate=simulate,
+            func_pandas=func_pandas,
+        )
+        result_df = params_df.mapInPandas(mapper, out_schema)
 
     if save:
         db.append(result_df)

@@ -309,6 +309,89 @@ def test_poolsize_runs_k_tasks(spark, calc_dir):
     assert len(_run_files(calc_dir, rid)) == 3
 
 
+def test_run_without_poolsize_calls_func_on_driver(spark, calc_dir):
+    """An eager run without poolsize calls func in the driver process,
+    outside any Spark task."""
+    df = run(spark, task_id_func, pgrid([plist("a", list(range(30)))]),
+             calc_dir=calc_dir)
+    assert [r["task_"] for r in df.select("task_").collect()] == [-1] * 30
+
+
+def kinds_func(pset):
+    return {"y_": pset["i"] * 2.5, "t_": datetime.datetime(2024, 5, 6, 7, 8, 9),
+            "tc_": pset["t_naive"], "s_": f"{pset['s']}!"}
+
+
+def test_serial_run_matches_poolsize_run(spark, calc_dir):
+    """The driver run (no poolsize) and the executor run (poolsize=1)
+    of one grid store the same rows and the same parquet schema, with
+    the driver's local time zone off UTC.  The driver path sends cells
+    through ``toInternal``, which reads a naive datetime as driver-local
+    time, while mapInPandas reads it in the session time zone: naive
+    params, a naive datetime result, a result copied from a naive param
+    and the naive-UTC ``_time_utc`` must all land as the same instant."""
+    import time
+
+    utc, east = datetime.timezone.utc, datetime.timezone(datetime.timedelta(hours=2))
+    params = [
+        {"i": 1, "x": 0.5, "s": "a", "flag": True, "ints": [1, 2], "c": 1 + 2j,
+         "o": max, "t_naive": datetime.datetime(2024, 1, 2, 3, 4, 5, 6),
+         "t_aware": datetime.datetime(2024, 1, 2, 3, 4, 5, tzinfo=east),
+         "t_list": [datetime.datetime(2020, 6, 1, 12), None]},
+        {"i": 2, "x": -1.25, "s": "b", "flag": False, "ints": [], "c": 0j,
+         "o": "str", "t_naive": datetime.datetime(1999, 12, 31, 23, 59, 59),
+         "t_aware": datetime.datetime(2024, 7, 1, tzinfo=utc),
+         "t_list": [datetime.datetime(2024, 3, 10, 2, 30, tzinfo=utc)]},
+    ]
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        t0 = int(time.time())
+        dfs = {
+            name: run(spark, kinds_func, params, calc_dir=calc_dir,
+                      database_dir=os.path.join(calc_dir, name),
+                      poolsize=poolsize, pickle_objects=True)
+            for name, poolsize in (("driver", None), ("pool", 1))
+        }
+        t1 = time.time()
+        varying = {"_run_id", "_pset_id", "_time_utc", "_pset_runtime"}
+        cols = [c for c in dfs["driver"].columns if c not in varying]
+
+        def stored(df):
+            return [tuple(r) for r in df.orderBy("_pset_seq").select(*cols).collect()]
+
+        def file_schema(name, df):
+            (rid,) = {r["_run_id"] for r in df.select("_run_id").collect()}
+            part = os.path.join(calc_dir, name, "data", f"_run_id={rid}")
+            return spark.read.parquet(part).schema
+
+        assert dfs["driver"].schema == dfs["pool"].schema
+        assert file_schema("driver", dfs["driver"]) == file_schema("pool", dfs["pool"])
+        assert stored(dfs["driver"]) == stored(dfs["pool"])
+        want_tc = [datetime.datetime(2024, 1, 2, 3, 4, 5, 6),
+                   datetime.datetime(1999, 12, 31, 23, 59, 59)]
+        for df in dfs.values():
+            rows = df.orderBy("_pset_seq").select(
+                "_run_id", "_pset_seq", "_pset_id", "tc_",
+                F.col("t_").cast("long").alias("t_s"),
+                F.col("_time_utc").cast("long").alias("time_s"),
+            ).collect()
+            assert [r["tc_"] for r in rows] == want_tc
+            want_t = datetime.datetime(2024, 5, 6, 7, 8, 9, tzinfo=utc).timestamp()
+            assert all(r["t_s"] == want_t for r in rows)
+            assert all(t0 <= r["time_s"] <= t1 for r in rows), (t0, rows, t1)
+            assert all(r["_pset_id"] == str(uuid.uuid5(uuid.UUID(r["_run_id"]),
+                                                       str(r["_pset_seq"])))
+                       for r in rows)
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+
+
 #: stored columns of a safe=True run with pset cols a, b and result_;
 #: _run_id is the partition directory, so a load lists it last
 STORED_COLUMNS = [
@@ -515,6 +598,40 @@ def test_save_false(spark, calc_dir):
     assert not Database(os.path.join(calc_dir, "database")).exists()
 
 
+def test_session_tz_region_and_offset(spark):
+    """The driver path reads naive timestamps in the session time zone,
+    which Spark accepts as a region id or as a fixed offset."""
+    from psweep_spark.runner import _session_tz
+
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "America/New_York")
+        assert str(_session_tz(spark)) == "America/New_York"
+        spark.conf.set(key, "+02:00")
+        assert _session_tz(spark).utcoffset(None) == datetime.timedelta(hours=2)
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_save_false_runs_func_once(spark, calc_dir, tmp_path):
+    """The rows of an eager save=False run are computed once: actions on
+    the returned DataFrame neither call func again nor restamp them."""
+    calls = tmp_path / "calls"
+
+    def counted(pset):
+        with open(calls, "a") as fh:
+            fh.write(f"{pset['a']}\n")
+        return {"result_": pset["a"] * 10.0}
+
+    df = run(spark, counted, plist("a", [1, 2, 3]), calc_dir=calc_dir, save=False)
+    assert df.count() == 3
+    stamps = ["a", "_time_utc", "_pset_runtime", "_pset_id"]
+    first = sorted(df.select(*stamps).collect())
+    assert sorted(df.select(*stamps).collect()) == first
+    assert len(calls.read_text().splitlines()) == 3
+
+
 def test_safe_mode_and_failed_psets(spark, calc_dir):
     def flaky(pset):
         if pset["a"] % 2 == 0:
@@ -556,6 +673,52 @@ def test_capture_logs_db_and_file(spark, calc_dir):
         logfile = os.path.join(calc_dir, r["_pset_id"], "logs.txt")
         assert os.path.isfile(logfile)
         assert f"hello from {r['a']}" in open(logfile).read()
+
+
+def test_capture_logs_concurrent_driver_runs(spark, tmp_path):
+    """Two run(capture_logs="db") calls in concurrent driver threads:
+    each row's _logs holds only its own pset's text.  The first func
+    waits while capturing, so without one capture at a time the second
+    would print into the first's buffer or take over sys.stdout."""
+    import sys
+    import threading
+
+    started, printed = threading.Event(), threading.Event()
+
+    def first(pset):
+        print("first starts")
+        started.set()
+        printed.wait(3)
+        print("first ends")
+        return {"n_": 1}
+
+    def second(pset):
+        started.wait(10)
+        print("second starts")
+        printed.set()
+        print("second ends")
+        return {"n_": 2}
+
+    stdout, out, errs = sys.stdout, {}, []
+
+    def worker(name, func):
+        try:
+            out[name] = run(spark, func, [{"a": 1}], capture_logs="db",
+                            calc_dir=str(tmp_path / name)).first()["_logs"]
+        except Exception as e:  # noqa: BLE001
+            errs.append(e)
+
+    threads = [threading.Thread(target=worker, args=(n, f))
+               for n, f in (("first", first), ("second", second))]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(300)
+    assert not any(t.is_alive() for t in threads)
+    assert not errs, errs
+    assert out == {"first": "first starts\nfirst ends\n",
+                   "second": "second starts\nsecond ends\n"}
+    assert sys.stdout is stdout
 
 
 def test_tmpsave(spark, calc_dir):
