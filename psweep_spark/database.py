@@ -4,9 +4,13 @@ Replaces the reference's pickled pandas DataFrame
 (``/root/reference/src/psweep/psweep.py:36,1334-1336,1478-1488``) with a
 Parquet table:
 
-* **append** = write new part files (``mode=append``), partitioned by
-  ``_run_id`` → partition pruning for per-run queries, no rewrite of
-  history on the hot path.
+* **append** = write new part files, partitioned by ``_run_id`` →
+  partition pruning for per-run queries, no rewrite of history on the
+  hot path.  Spark writes a DataFrame run; a run whose rows are already
+  on the driver (an eager ``run()`` without a pool) is one Arrow table,
+  which pyarrow writes on the driver as the one file Spark would have
+  written (same name, footer keys, timestamp type and per-column
+  dictionary choice), so its commit runs no Spark job.
 * **the manifest pins the table schema** (reference
   ``df_update_pset_cols``, psweep.py:690-710, merges each run's new
   keys into the schema once, at append time; so does this engine).
@@ -46,9 +50,13 @@ import time
 import uuid
 from contextlib import contextmanager
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .hashing import df_hash_expr, filter_cols
 from .metastore import LocalFSMetaStore, MetaStore
@@ -59,6 +67,9 @@ DATA_DIRNAME = "data"
 DATA_DIR_KEY = "data_dir"
 LOCK_BASENAME = ".writer_lock"
 SEQ_COLS = ("_run_seq", "_pset_seq")
+#: the footer keys Spark's Parquet writer sets
+SPARK_ROW_META_KEY = "org.apache.spark.sql.parquet.row.metadata"
+SPARK_VERSION_KEY = "org.apache.spark.version"
 
 
 def _fold_schema(old: T.StructType | None, new: T.StructType) -> T.StructType:
@@ -96,6 +107,117 @@ def _conform(df: DataFrame, schema: T.StructType) -> DataFrame:
         else F.lit(None).cast(f.dataType).alias(f.name, metadata=f.metadata)
         for f in schema.fields
     ])
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and map value nullable, as Spark
+    writes a Parquet schema."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _dictionary_columns(table: pa.Table, int96: bool) -> list[str]:
+    """The top-level flat columns that parquet-mr would keep
+    dictionary-encoded: those whose dictionary (distinct values) plus
+    bit-packed indices is smaller than their plain encoding.  parquet-mr
+    makes this check on its first page and falls back to PLAIN
+    otherwise, so near-unique columns (hashes, ids, seqs, most results)
+    stay PLAIN; pyarrow's default would dictionary-encode them all.
+    Booleans and nested columns stay PLAIN."""
+    out = []
+    for name, col in zip(table.column_names, table.columns):
+        t = col.type
+        if pa.types.is_boolean(t) or pa.types.is_nested(t):
+            continue
+        n = len(col) - col.null_count
+        if pa.types.is_string(t) or pa.types.is_binary(t):
+            uniq = pc.unique(pc.drop_null(col))
+            n_uniq = len(uniq)
+            plain = (pc.sum(pc.binary_length(col)).as_py() or 0) + 4 * n
+            dictionary = (pc.sum(pc.binary_length(uniq)).as_py() or 0) + 4 * n_uniq
+        else:
+            width = 12 if int96 and pa.types.is_timestamp(t) else t.bit_width // 8
+            n_uniq = pc.count_distinct(col).as_py()
+            plain, dictionary = n * width, n_uniq * width
+        if dictionary + n * max(n_uniq - 1, 0).bit_length() / 8 < plain:
+            out.append(name)
+    return out
+
+
+def _write_spark(df: DataFrame, staging: str) -> tuple[int, int]:
+    """Spark writes ``df`` under ``staging``, partitioned by ``_run_id``.
+    The write observes the rows' max ``_run_seq``/``_pset_seq`` (no
+    extra job); returns them, -1 where absent."""
+    seq_cols = [c for c in SEQ_COLS if c in df.columns]
+    obs = Observation()
+    staged = df.observe(obs, *[F.max(c).alias(c) for c in seq_cols]) if seq_cols else df
+    (
+        staged.write.mode("overwrite")
+        .option("compression", "snappy")
+        .partitionBy("_run_id")
+        .parquet(staging)
+    )
+    got = obs.get if seq_cols else {}
+    return tuple(-1 if got.get(c) is None else int(got[c]) for c in SEQ_COLS)
+
+
+def _write_arrow(
+    spark: SparkSession, table: pa.Table, schema: T.StructType, staging: str
+) -> tuple[int, int]:
+    """pyarrow writes ``table``, one run's rows of Spark ``schema``,
+    under ``staging`` on the driver, in the shape of the one file Spark
+    writes from one task:
+    ``_run_id=<id>/part-00000-<uuid>.c000.snappy.parquet``, every column
+    optional, with the footer keys Spark reads (the Spark schema without
+    ``_run_id``, field metadata included, and the Spark version, whose
+    presence tells Spark the dates and timestamps are proleptic
+    Gregorian, as Spark 4 writes them).  Timestamps follow
+    ``spark.sql.parquet.outputTimestampType``: INT96 by default, else
+    INT64 micros or millis.  pyarrow sets INT96 for every timestamp
+    column, and Spark keeps ``TIMESTAMP_NTZ`` as INT64, so a schema
+    with an NTZ column writes INT64 micros throughout.  Dictionary
+    encoding follows parquet-mr (:func:`_dictionary_columns`).  The
+    file also carries pyarrow's ``ARROW:schema`` key: on pyarrow 16 a
+    write without it drops every custom key.  Runs no Spark job;
+    returns the table's max ``_run_seq``/``_pset_seq``, -1 where
+    absent."""
+    file_schema = T.StructType(
+        [f for f in _nullable(schema).fields if f.name != "_run_id"]
+    )
+    ts = spark.conf.get("spark.sql.parquet.outputTimestampType")
+    ntz = any("timestamp_ntz" in f.dataType.simpleString() for f in schema.fields)
+    int96 = ts == "INT96" and not ntz
+    unit = None if int96 else ("ms" if ts == "TIMESTAMP_MILLIS" else "us")
+    arrow_schema = to_arrow_schema(file_schema).with_metadata({
+        SPARK_ROW_META_KEY: json.dumps(file_schema.jsonValue(), separators=(",", ":")),
+        SPARK_VERSION_KEY: spark.version,
+    })
+    (run_id,) = table["_run_id"].unique().to_pylist()
+    data = table.select(file_schema.names).cast(arrow_schema)
+    d = os.path.join(staging, f"_run_id={run_id}")
+    os.makedirs(d)
+    pq.write_table(
+        data,
+        os.path.join(d, f"part-00000-{uuid.uuid4()}.c000.snappy.parquet"),
+        compression="snappy",
+        use_dictionary=_dictionary_columns(data, int96),
+        use_deprecated_int96_timestamps=int96,
+        coerce_timestamps=unit,
+        allow_truncated_timestamps=True,
+    )
+    maxima = [
+        pc.max(table[c]).as_py() if c in table.column_names else None
+        for c in SEQ_COLS
+    ]
+    return tuple(-1 if m is None else int(m) for m in maxima)
 
 
 class Database:
@@ -415,48 +537,51 @@ class Database:
 
     # -- write ---------------------------------------------------------------
 
-    def append(self, new_df: DataFrame) -> None:
+    def append(
+        self,
+        new: DataFrame | pa.Table,
+        schema: T.StructType | None = None,
+        spark: SparkSession | None = None,
+    ) -> None:
         """Append one run's rows; widen + rehash history if pset cols grew.
 
+        ``new`` is a DataFrame, or the Arrow table of a run whose rows
+        are already on the driver, given with its Spark ``schema`` and
+        the ``spark`` session.
+
         **Stage-then-commit** (concurrency-safe): the new rows are
-        first written to a private staging directory — the expensive
-        part (executing the run's ``mapInPandas`` plan) runs with NO
-        lock held, so concurrent runs overlap their compute.  The write
-        also observes the rows' max ``_run_seq``/``_pset_seq`` (no
-        extra job), so rows that reserved no seqs still move the
-        watermarks.  Commit then happens under :meth:`writer_lock`:
-        the run's schema is checked against and folded into the pinned
-        schema (a type change raises ``TypeError`` and nothing lands)
-        in one manifest CAS, then each staged ``_run_id=…`` directory
-        moves into the live directory by rename (run ids are UUIDs and
-        part filenames carry the task UUID, so nothing collides; no two
-        Spark jobs share a ``_temporary`` committer directory).  A
-        pset-schema-widening append is a :meth:`_rewrite` instead,
-        under the same lock: history and the staged rows are rehashed
-        into a fresh directory that one manifest CAS makes live."""
-        spark = new_df.sparkSession
+        first written to a private staging directory with NO lock held.
+        Spark writes a DataFrame (:func:`_write_spark`): the expensive
+        part, executing the run's ``mapInPandas`` plan, runs unlocked,
+        so concurrent runs overlap their compute, and the write observes
+        the rows' max ``_run_seq``/``_pset_seq``.  An Arrow table is
+        written on the driver by pyarrow as the one file Spark would
+        write (:func:`_write_arrow`): no Spark job, and its seqs are read
+        from the table.  Either way rows that reserved no seqs still
+        move the watermarks.  Commit then happens under
+        :meth:`writer_lock`: the run's schema is checked against and
+        folded into the pinned schema (a type change raises
+        ``TypeError`` and nothing lands) in one manifest CAS, then each
+        staged ``_run_id=…`` directory moves into the live directory by
+        rename (run ids are UUIDs and part filenames carry a UUID, so
+        nothing collides; no two Spark jobs share a ``_temporary``
+        committer directory).  A pset-schema-widening append is a
+        :meth:`_rewrite` instead, under the same lock: history and the
+        staged rows are rehashed into a fresh directory that one
+        manifest CAS makes live."""
         staging = os.path.join(
             self.path, f"{DATA_DIRNAME}.staging-{uuid.uuid4().hex[:12]}"
         )
-        seq_cols = [c for c in SEQ_COLS if c in new_df.columns]
-        obs = Observation()
-        staged = (
-            new_df.observe(obs, *[F.max(c).alias(c) for c in seq_cols])
-            if seq_cols else new_df
-        )
-        (
-            staged.write.mode("overwrite")
-            .option("compression", "snappy")
-            .partitionBy("_run_id")
-            .parquet(staging)
-        )
-        got = obs.get if seq_cols else {}
-        seqs = tuple(-1 if got.get(c) is None else int(got[c]) for c in SEQ_COLS)
         try:
+            if isinstance(new, DataFrame):
+                spark, schema = new.sparkSession, new.schema
+                seqs = _write_spark(new, staging)
+            else:
+                seqs = _write_arrow(spark, new, schema, staging)
             with self.writer_lock():
                 old_df = self.load(spark)
                 if old_df is not None and (
-                    set(filter_cols(new_df.columns))
+                    set(filter_cols(schema.names))
                     - set(filter_cols(old_df.columns))
                 ):
                     # pset schema widened: NULL-extend history and
@@ -465,8 +590,8 @@ class Database:
                     # table rewrite.  Re-read the STAGED files (schema
                     # pinned — no partition-value type re-inference)
                     # instead of re-executing the run plan.
-                    target = _fold_schema(old_df.schema, new_df.schema)
-                    staged_df = spark.read.schema(new_df.schema).parquet(staging)
+                    target = _fold_schema(old_df.schema, schema)
+                    staged_df = spark.read.schema(schema).parquet(staging)
                     all_df = _conform(old_df, target).unionByName(
                         _conform(staged_df, target)
                     )
@@ -475,7 +600,7 @@ class Database:
                     )
                     self._rewrite(all_df, seqs)
                 else:
-                    self._commit_schema(spark, new_df.schema, seqs)
+                    self._commit_schema(spark, schema, seqs)
                     self._commit_staging(staging)
         finally:
             shutil.rmtree(staging, ignore_errors=True)

@@ -28,10 +28,13 @@ and there is no shuffle and no ``distinct()``.  The kept psets' ids
 are stamped in Python, ``_pset_seq`` from their submission order.
 Without ``poolsize`` (and without ``func_pandas``)
 :func:`_run_on_driver` calls ``func`` on each on the driver and the
-results become one ``LocalRelation``: the write is one task (one file
-per run) with no Python-worker stage.  With ``poolsize`` or
-``func_pandas`` the stamped rows become a ``LocalRelation`` that runs
-in the executor stage like a lazy grid: ``poolsize`` tasks, else one.
+results become one Arrow table, which :meth:`Database.append` writes
+on the driver as one Parquet file: the run's write is no Spark job,
+and a run without skip-dups runs none at all (while the table has at
+most 32 runs; past that, listing it in ``Database.load`` is one).
+With ``poolsize`` or ``func_pandas`` the stamped rows become a
+``LocalRelation`` that runs in the executor stage like a lazy grid:
+``poolsize`` tasks, else one.
 
 Retry idempotence (SURVEY §4b): ``_pset_id`` is **UUIDv5 of
 (run_id, pset_seq)**, not a random UUID4 — a re-executed Spark task
@@ -43,7 +46,8 @@ psweep.py:1197-1292) is ONE function, :func:`_exec_pset`, layered as
 in the reference:
 
 * it stamps ``_time_utc`` (naive UTC, second resolution: the
-  reference's PANDAS_TIME_UNIT="s", psweep.py:32) and ``_exec_host``;
+  reference's PANDAS_TIME_UNIT="s", psweep.py:32; stored as that UTC
+  instant under any session time zone) and ``_exec_host``;
 * it calls ``func(pset) -> dict`` on the fully-stamped pset dict
   through :func:`_call_func`, the capture layer: ``capture_logs`` ∈
   {'db','file','db+file'} captures stdout/stderr, and ``safe=True``
@@ -311,29 +315,35 @@ def _typed_rows(
     return schema, [tuple(_cell(p, f) for f in schema.fields) for p in params]
 
 
-def _local_df(
-    spark: SparkSession, schema: T.StructType, rows: list[tuple]
-) -> DataFrame:
-    """Typed tuples → DataFrame through one ``pyarrow.Table``.
+def _arrow_table(schema: T.StructType, rows: list[tuple]) -> pa.Table:
+    """Typed tuples → one ``pyarrow.Table`` of ``schema``.
 
-    Spark keeps a table under ``spark.sql.execution.arrow.
-    localRelationThreshold`` as a JVM-side ``LocalRelation`` (no RDD,
-    so a projection of it collects with no job) and falls back to an
-    RDD of Arrow batches above it.  The cells go through
-    ``schema.toInternal`` first, as a list of rows does in Spark's own
-    ``createDataFrame``: a naive ``datetime`` is read as driver-local
-    time, an aware one by its offset, at any nesting depth.  Field
-    metadata travels with ``schema``."""
+    The cells go through ``schema.toInternal`` first, as a list of rows
+    does in Spark's own ``createDataFrame``: a naive ``datetime`` is
+    read as driver-local time, an aware one by its offset, at any
+    nesting depth."""
     arrow_schema = to_arrow_schema(schema)
     internal = [schema.toInternal(r) for r in rows]
-    table = pa.Table.from_arrays(
+    return pa.Table.from_arrays(
         [
             pa.array([r[i] for r in internal], type=f.type)
             for i, f in enumerate(arrow_schema)
         ],
         schema=arrow_schema,
     )
-    return spark.createDataFrame(table, schema)
+
+
+def _local_df(
+    spark: SparkSession, schema: T.StructType, rows: list[tuple]
+) -> DataFrame:
+    """Typed tuples → DataFrame through one :func:`_arrow_table`.
+
+    Spark keeps a table under ``spark.sql.execution.arrow.
+    localRelationThreshold`` as a JVM-side ``LocalRelation`` (no RDD,
+    so a projection of it collects with no job) and falls back to an
+    RDD of Arrow batches above it.  Field metadata travels with
+    ``schema``."""
+    return spark.createDataFrame(_arrow_table(schema, rows), schema)
 
 
 def prepare_params_df(
@@ -386,9 +396,17 @@ _STAMPS = ("_time_utc", "_exec_host", "_pset_runtime")
 
 
 def _utc_seconds(t: float) -> _dt.datetime:
-    """``_time_utc``: naive UTC at second resolution (the reference's
-    PANDAS_TIME_UNIT="s", psweep.py:32)."""
+    """``_time_utc`` as ``func`` sees it: naive UTC at second resolution
+    (the reference's PANDAS_TIME_UNIT="s", psweep.py:32)."""
     return _dt.datetime.fromtimestamp(int(t), _dt.timezone.utc).replace(tzinfo=None)
+
+
+def _as_utc(t: _dt.datetime) -> _dt.datetime:
+    """``_time_utc`` as it is stored: the naive UTC stamp made aware, so
+    that the conversion to a Spark timestamp, which reads a naive
+    ``datetime`` as wall time in the session time zone, keeps the
+    instant."""
+    return t.replace(tzinfo=_dt.timezone.utc) if t.tzinfo is None else t
 
 
 def _atomic_write(path: str, payload: bytes) -> None:
@@ -676,7 +694,7 @@ def _make_mapper(
                         # logs (per-batch text)
                         for pid, txt in zip(out["_pset_id"], logs_col):
                             _write_logs(calc_dir, pid, txt or "")
-                out["_time_utc"] = _utc_seconds(t0)
+                out["_time_utc"] = _as_utc(_utc_seconds(t0))
                 out["_exec_host"] = host
                 out["_pset_runtime"] = dt / n if n else 0.0
                 for c in out_names:
@@ -721,6 +739,8 @@ def _make_mapper(
             if orig is not None:
                 return bytes(orig)
             return obj_to_bytes(v)
+        if c == "_time_utc":
+            return _as_utc(v)
         return v
 
     def mapper(batches):
@@ -967,10 +987,11 @@ def _run_on_driver(
     tmpsave: bool,
     simulate: bool,
     pickle_objects: bool,
-) -> DataFrame:
+) -> tuple[pa.Table, T.StructType]:
     """``func`` on every stamped pset row, serially on the driver, as the
     reference runs ``poolsize=None`` (``list(map(func, params))``,
-    psweep.py:1465-1466); the results as one ``LocalRelation``.
+    psweep.py:1465-1466); the results as one Arrow table and its Spark
+    schema, which :meth:`Database.append` writes on the driver.
 
     Each pset's record is its row as ``take()`` returns it
     (:func:`_spark_rows`), and it goes through :func:`_exec_pset` once.
@@ -981,8 +1002,8 @@ def _run_on_driver(
     Timestamps follow mapInPandas's Arrow conversion, so this path and
     the executor path store the same rows: ``func`` sees a naive
     ``datetime`` as wall time in the session time zone, and a naive
-    ``datetime`` in a stored cell (a result, ``_time_utc``) is read in
-    that zone."""
+    ``datetime`` in a stored result is read in that zone.  ``_time_utc``
+    is stored as the UTC instant it stamps (:func:`_as_utc`)."""
     tz = _session_tz(spark)
     ts_cols = [f.name for f in in_schema.fields if "timestamp" in f.dataType.simpleString()]
     psets = []
@@ -1018,10 +1039,12 @@ def _run_on_driver(
             # _pset_hash was computed over; results are framed fresh
             orig = row[pos[f.name]] if f.name in pos else None
             return obj_to_bytes(v) if orig is None else orig
+        if f.name == "_time_utc":
+            v = _as_utc(v)
         return _to_row_value(v, f.dataType, tz)
 
     out = [tuple(cell(p, r, f) for f in out_schema.fields) for p, r in zip(psets, rows)]
-    return _local_df(spark, out_schema, out).coalesce(1)
+    return _arrow_table(out_schema, out), out_schema
 
 
 # ---------------------------------------------------------------------------
@@ -1058,7 +1081,8 @@ def run(
     * an eager (list-of-dicts) grid without ``poolsize`` runs serially
       on the driver, one ``func`` call per pset (the reference's
       ``list(map(func, params))``), and its results are written as one
-      ``LocalRelation`` (:func:`_run_on_driver`);
+      Parquet file by pyarrow on the driver, with no Spark job
+      (:func:`_run_on_driver`, :meth:`Database.append`);
     * ``poolsize=N`` runs ``func`` in N executor tasks of one
       ``mapInPandas`` stage, one parquet file each;
     * a lazy ``DataFrame`` grid runs in the executor stage too, with
@@ -1072,9 +1096,9 @@ def run(
 
     Returns the full accumulated database as a DataFrame.  With
     ``save=False`` it is the loaded DB unioned with this run's rows:
-    those of a driver run are in memory, so ``func`` ran exactly once
-    per pset; those of an executor run stay a lazy plan, which runs
-    ``func`` again on every action.
+    those of a driver run are a ``LocalRelation`` of its Arrow table,
+    so ``func`` ran exactly once per pset; those of an executor run stay
+    a lazy plan, which runs ``func`` again on every action.
     """
     if capture_logs not in (None, "db", "file", "db+file"):
         raise ValueError(f"capture_logs must be db|file|db+file, got {capture_logs!r}")
@@ -1187,11 +1211,12 @@ def run(
 
     row_func = func if func is not None else (lambda p: {})
     if eager and not poolsize and func_pandas is None:
-        result_df = _run_on_driver(
+        table, out_schema = _run_on_driver(
             spark, row_func, in_schema, rows, res_fields, stamp_fields,
             capture_logs=capture_logs, safe=safe, tmpsave=tmpsave,
             simulate=simulate, pickle_objects=pickle_objects,
         )
+        result_df = None if save else spark.createDataFrame(table, out_schema)
     else:
         if eager:
             params_df = _local_df(spark, in_schema, rows)
@@ -1228,7 +1253,10 @@ def run(
         result_df = params_df.mapInPandas(mapper, out_schema)
 
     if save:
-        db.append(result_df)
+        if result_df is None:
+            db.append(table, out_schema, spark)
+        else:
+            db.append(result_df)
         full = db.load(spark)
         assert full is not None
     else:

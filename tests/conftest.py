@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -32,3 +33,16 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def jobs_of(spark, thunk):
+    """Spark job ids started while ``thunk`` runs, and its result."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted")
+    try:
+        out = thunk()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store lags
+    return list(sc.statusTracker().getJobIdsForGroup(group)), out

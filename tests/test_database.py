@@ -3,17 +3,26 @@ and must return what a ``mergeSchema`` read of the same files returns —
 names, types and field metadata — with ``_run_id`` last, and reading
 the table's metadata runs no Spark job."""
 
+import datetime
 import glob
+import json
 import os
 import threading
 import time
-import uuid
 
 import numpy as np
 import pytest
+from conftest import jobs_of
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from psweep_spark import Database, pgrid, plist, run
-from psweep_spark.database import DATA_DIR_KEY, SCHEMA_PREFIX
+from psweep_spark.database import (
+    DATA_DIR_KEY,
+    SCHEMA_PREFIX,
+    SPARK_ROW_META_KEY,
+    SPARK_VERSION_KEY,
+)
 from psweep_spark.metastore import InMemoryConditionalStore
 from psweep_spark.objects import pickled_cols
 
@@ -58,19 +67,6 @@ def assert_equivalent(spark, db):
     assert _fields(pinned) == _fields(merged)
     assert pinned.names[-1] == "_run_id"
     return pinned
-
-
-def _jobs_of(spark, thunk):
-    """Spark job ids started while ``thunk`` runs, and its result."""
-    sc = spark.sparkContext
-    group = f"db-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "database metadata")
-    try:
-        out = thunk()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store lags
-    return sc.statusTracker().getJobIdsForGroup(group), out
 
 
 def _race(spark, calc_dir, *jobs):
@@ -183,7 +179,7 @@ def test_metadata_reads_run_no_job(spark, calc_dir):
         db.distinct_hashes(spark)
         return schema, db.reserve_seqs(spark, 4)
 
-    jobs, (schema, seqs) = _jobs_of(spark, reads)
+    jobs, (schema, seqs) = jobs_of(spark, reads)
     assert list(jobs) == [], jobs
     assert "x_" in schema.names
     assert seqs == (2, 2)
@@ -201,7 +197,7 @@ def test_legacy_manifest_falls_back_and_is_repinned(spark, calc_dir):
     # an older engine's manifest: watermarks that trail the data
     db.update_meta(lambda m: {"engine": m["engine"]})
     assert db.pinned_schema() is None
-    jobs, df = _jobs_of(spark, lambda: db.load(spark))
+    jobs, df = jobs_of(spark, lambda: db.load(spark))
     assert len(jobs) >= 1  # the mergeSchema footer job
     assert _fields(df.schema) == _fields(pinned)
     assert df.count() == 3
@@ -382,3 +378,147 @@ def test_backup_and_clone_copy_only_live_directory(spark, calc_dir, tmp_path):
         assert not [n for n in names if n.startswith(".writer_lock")], names
         assert len(copy.meta_store.list_keys("_psweep_meta.v")) == 1
         assert sorted(tuple(r) for r in copy.load(spark).collect()) == want
+
+
+# -- files that run() writes on the driver ------------------------------------
+
+UTC = datetime.timezone.utc
+
+
+def func_old_dates(pset):
+    return {"d_": datetime.date(1500, 3, 1),
+            "t_": datetime.datetime(1850, 6, 1, tzinfo=UTC), "y_": pset["a"] / 3}
+
+
+#: params with dates and timestamps before the Gregorian switch and
+#: before 1900, where a hybrid-calendar reader or writer shifts them
+OLD_DATE_PARAMS = [
+    {"a": 1, "day": datetime.date(1500, 3, 1),
+     "when": datetime.datetime(1500, 1, 1, tzinfo=UTC)},
+    {"a": 2, "day": datetime.date(2024, 2, 29),
+     "when": datetime.datetime(1850, 6, 1, 12, 30, tzinfo=UTC)},
+]
+
+#: (a, day, when as epoch micros) of OLD_DATE_PARAMS, as stored
+OLD_DATE_HEAD = [
+    (p["a"], p["day"], round(p["when"].timestamp()) * 10**6) for p in OLD_DATE_PARAMS
+]
+
+
+def _run_file(db, run_id):
+    (path,) = glob.glob(os.path.join(db.data_path, f"_run_id={run_id}", "*.parquet"))
+    return path
+
+
+def _rows(df, schema):
+    """Rows of ``df`` with each timestamp column as epoch micros."""
+    return sorted(
+        tuple(r) for r in df.select(*[
+            F.unix_micros(f.name).alias(f.name)
+            if isinstance(f.dataType, T.TimestampType) else f.name
+            for f in schema.fields
+        ]).collect()
+    )
+
+
+def test_driver_file_reads_the_same_in_duckdb(spark, calc_dir):
+    """A file written on the driver carries Spark's footer keys, and
+    DuckDB reads the rows that load() returns, dates and timestamps
+    before 1582 and 1900 included."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    out = run(spark, func_old_dates, OLD_DATE_PARAMS, calc_dir=calc_dir)
+    db = _db(calc_dir)
+    path = _run_file(db, out.first()["_run_id"])
+    footer = {k.decode(): v.decode()
+              for k, v in pq.ParquetFile(path).metadata.metadata.items()}
+    file_schema = T.StructType([f for f in out.schema.fields if f.name != "_run_id"])
+    assert T.StructType.fromJson(json.loads(footer[SPARK_ROW_META_KEY])) == file_schema
+    assert footer[SPARK_VERSION_KEY] == spark.version
+    want = _rows(db.load(spark), out.schema)
+    assert [r[:3] for r in want] == OLD_DATE_HEAD
+    cols = ", ".join(
+        f'epoch_us("{f.name}")' if isinstance(f.dataType, T.TimestampType)
+        else f'"{f.name}"'
+        for f in out.schema.fields
+    )
+    got = duckdb.sql(
+        f"SELECT {cols} FROM read_parquet('{db.data_path}/*/*.parquet', "
+        "hive_partitioning = true)"
+    ).fetchall()
+    assert sorted(got) == want
+
+
+def test_driver_file_follows_output_timestamp_type(spark, calc_dir):
+    """INT96 by default, as Spark writes; INT64 micros under
+    ``outputTimestampType=TIMESTAMP_MICROS``, with the same instants."""
+    import pyarrow.parquet as pq
+
+    key = "spark.sql.parquet.outputTimestampType"
+    old = spark.conf.get(key)
+    try:
+        for kind, physical in (("INT96", "INT96"), ("TIMESTAMP_MICROS", "INT64")):
+            spark.conf.set(key, kind)
+            out = run(spark, func_old_dates, OLD_DATE_PARAMS, calc_dir=calc_dir,
+                      database_dir=os.path.join(calc_dir, kind))
+            db = Database(os.path.join(calc_dir, kind))
+            schema = pq.ParquetFile(_run_file(db, out.first()["_run_id"])).schema
+            types = {schema.column(i).name: schema.column(i).physical_type
+                     for i in range(len(schema))}
+            assert {types[c] for c in ("when", "t_", "_time_utc")} == {physical}
+            assert [r[:3] for r in _rows(db.load(spark), out.schema)] == OLD_DATE_HEAD
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_driver_file_dictionary_encodes_what_spark_does(spark, calc_dir):
+    """The driver's file dictionary-encodes the columns Spark's file of
+    the same grid does: low-cardinality ones, not the near-unique
+    hashes, ids and seqs (``_pset_runtime`` differs between the runs)."""
+    import pyarrow.parquet as pq
+
+    grid = pgrid([plist("a", list(range(50))), plist("b", ["x", "y"])])
+    dicts = []
+    for name, poolsize in (("driver", None), ("pool", 1)):
+        out = run(spark, func_a, grid, calc_dir=calc_dir, poolsize=poolsize,
+                  database_dir=os.path.join(calc_dir, name))
+        db = Database(os.path.join(calc_dir, name))
+        rg = pq.ParquetFile(_run_file(db, out.first()["_run_id"])).metadata.row_group(0)
+        dicts.append({rg.column(i).path_in_schema for i in range(rg.num_columns)
+                      if rg.column(i).has_dictionary_page} - {"_pset_runtime"})
+    assert dicts[0] == dicts[1]
+    assert {"a", "b", "_run_seq", "result_"} <= dicts[0]
+    assert not {"_pset_hash", "_pset_seq", "_pset_id"} & dicts[0]
+
+
+def test_driver_file_keeps_timestamp_ntz_as_int64(spark, calc_dir):
+    """Spark stores ``TIMESTAMP_NTZ`` as INT64 micros; pyarrow's INT96
+    switch covers every timestamp column, so a run with an NTZ column
+    stores all of them as INT64 micros, and both read back."""
+    import pyarrow.parquet as pq
+
+    wall = datetime.datetime(1850, 6, 1, 12, 30)
+    out = run(spark, lambda p: {"w_": wall}, [{"a": 1}], calc_dir=calc_dir,
+              result_schema=T.StructType([T.StructField("w_", T.TimestampNTZType())]))
+    schema = pq.ParquetFile(_run_file(_db(calc_dir), out.first()["_run_id"])).schema
+    types = {schema.column(i).name: schema.column(i).physical_type
+             for i in range(len(schema))}
+    assert (types["w_"], types["_time_utc"]) == ("INT64", "INT64")
+    row = _db(calc_dir).load(spark).first()
+    assert row["w_"] == wall and row["_time_utc"] is not None
+
+
+def test_compact_and_backup_keep_driver_written_rows(spark, calc_dir):
+    """compact() and backup() of a DB of driver-written files keep every
+    row, old dates and timestamps included."""
+    run(spark, func_old_dates, OLD_DATE_PARAMS, calc_dir=calc_dir)
+    run(spark, func_old_dates, [dict(p, a=p["a"] + 2) for p in OLD_DATE_PARAMS],
+        calc_dir=calc_dir)
+    db = _db(calc_dir)
+    schema = db.load(spark).schema
+    want = _rows(db.load(spark), schema)
+    assert len(want) == 4
+    assert db.compact(spark) == 2  # one file per _run_id partition
+    assert _rows(db.load(spark), schema) == want
+    assert _rows(Database(db.backup("t")).load(spark), schema) == want

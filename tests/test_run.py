@@ -11,6 +11,7 @@ import re
 import uuid
 
 import pytest
+from conftest import jobs_of
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -85,26 +86,31 @@ def _run_files(calc_dir, run_id):
 
 
 def test_eager_skip_dups_runs_few_jobs(spark, calc_dir):
-    """An eager skip-dups run keeps its grid on the driver and its
-    Database calls read the manifest, not the table: a second
-    run(skip_dups=True, safe=True) runs at most 3 Spark jobs (the
-    broadcast of the grid's hashes, the left-semi probe of the DB, the
-    write), where the take/agg/take/write sequence with schema-merge
-    loads took 20."""
+    """An eager skip-dups run keeps its grid on the driver, its Database
+    calls read the manifest, not the table, and its one file is written
+    on the driver: a second run(skip_dups=True, safe=True) runs at most
+    2 Spark jobs (the broadcast of the grid's hashes, the left-semi
+    probe of the DB), where the take/agg/take/write sequence with
+    schema-merge loads took 20."""
     run(spark, func_a, pgrid([plist("a", list(range(40)))]),
         calc_dir=calc_dir, skip_dups=True, safe=True)
-    sc = spark.sparkContext
-    group = f"eager-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "second eager run")
-    try:
-        df = run(spark, func_a, pgrid([plist("a", list(range(20, 60)))]),
-                 calc_dir=calc_dir, skip_dups=True, safe=True)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store lags
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 3, len(jobs)
+    jobs, df = jobs_of(spark, lambda: run(
+        spark, func_a, pgrid([plist("a", list(range(20, 60)))]),
+        calc_dir=calc_dir, skip_dups=True, safe=True))
+    assert 0 < len(jobs) <= 2, len(jobs)
     assert df.count() == 60
+
+
+def test_eager_runs_without_skip_dups_run_no_job(spark, calc_dir):
+    """A first eager run and a later one without skip-dups read only the
+    manifest, run func on the driver and write their file there: no
+    Spark job."""
+    grid = pgrid([plist("a", list(range(20)))])
+    for _ in range(2):
+        jobs, df = jobs_of(spark, lambda: run(spark, func_a, grid,
+                                              calc_dir=calc_dir, safe=True))
+        assert jobs == []
+    assert df.count() == 40
 
 
 def test_eager_skip_dups_seq_contiguous_in_submission_order(spark, calc_dir):
@@ -390,6 +396,34 @@ def test_serial_run_matches_poolsize_run(spark, calc_dir):
         else:
             os.environ["TZ"] = old_tz
         time.tzset()
+
+
+def time_func(pset):
+    return {"naive_": pset["_time_utc"].tzinfo is None}
+
+
+def test_time_utc_is_the_instant_under_a_session_time_zone(spark, calc_dir):
+    """``func`` sees ``_time_utc`` as naive UTC; the stored value is the
+    instant, on the driver and on executors, whatever the session time
+    zone."""
+    import time
+
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try:
+        t0 = int(time.time())
+        dfs = [run(spark, time_func, pgrid([plist("a", [1, 2, 3])]),
+                   calc_dir=calc_dir, database_dir=os.path.join(calc_dir, name),
+                   poolsize=poolsize)
+               for name, poolsize in (("driver", None), ("pool", 1))]
+        t1 = time.time()
+        for df in dfs:
+            rows = df.select("naive_", F.unix_timestamp("_time_utc")).collect()
+            assert len(rows) == 3
+            assert all(r[0] and t0 <= r[1] <= t1 for r in rows), (t0, rows, t1)
+    finally:
+        spark.conf.set(key, old)
 
 
 #: stored columns of a safe=True run with pset cols a, b and result_;
