@@ -17,8 +17,12 @@ engine defines its own canonical encoding as the correctness oracle
 1. Computable **JVM-side** as a Catalyst expression built from the
    DataFrame schema (``hash_expr``) — no Python UDF in the hot path, so
    hashing 10^9 psets stays in whole-stage codegen.
-2. Computable in **pure Python** on plain dicts (``pset_hash``) — the
-   driver-side API mirror; both must agree bit-for-bit.
+2. Computable in **pure Python**: on plain dicts (``pset_hash``, the
+   driver-side API mirror) and on typed rows (``row_hashes``, the
+   schema-driven twin of ``hash_expr``).  Both must agree with the JVM
+   bit-for-bit, and this is on the hot path: an eager ``run()`` hashes
+   its grid with ``row_hashes`` and probes skip-dups with those hashes
+   against hashes the JVM stored.
 3. Expressible in **ANSI/DuckDB SQL** (``hash_sql``) so the hash itself
    is oracle-checkable.
 
@@ -36,6 +40,15 @@ Canonical encoding (sha256 over the UTF-8 concatenation):
            | "p:" <lowercase hex of cloudpickle bytes>   arbitrary object
            | "[" value ("," value)* "]"          array
            | "{" name "=" value ("," ...)* "}"   struct, name-sorted
+
+A double's decimal is Spark's ``CAST(double AS DECIMAL(38,18))``,
+which parses Java's ``Double.toString``, rounded half-up to 18
+places; a zero, ``-0.0`` and a tiny negative included, is unsigned.
+Java 17 prints an integer-valued double below 2**63 exactly, minus
+``insignificantDigitsForPow2(binExp - 54)`` low digits rounded off
+half-up (one digit from 2**58, two from 2**61), and any other double
+as its shortest round-trip repr, which Python's ``repr`` also is.
+:func:`_canon_double` mirrors that rule.
 
 Arbitrary objects (the reference's dtype=object params) are value-wise:
 ``canon_value`` pickles them, and stored ``MAGIC+pickle`` binary cells
@@ -102,26 +115,39 @@ def filter_cols(cols, kind: str = "pset") -> list[str]:
 # ---------------------------------------------------------------------------
 
 _Q18 = Decimal(1).scaleb(-18)
+#: binary exponent → the low digits Java 17's Double.toString rounds off
+#: an integer-valued double (insignificantDigitsForPow2(binExp - 54));
+#: none below 2**58, and past 2**63 it prints the shortest repr instead
+_JAVA_DROPPED_DIGITS = {58: 1, 59: 1, 60: 1, 61: 2, 62: 2}
 
 
-def _canon_double(v: float) -> str:
+def _canon_double(v: float, limit: float = 1e18) -> str:
+    """``d:`` + ``v`` as Spark's ``CAST(v AS DECIMAL(38,18))`` prints
+    it, for ``|v| < limit``.  :func:`pset_hash` keeps ``|v| < 1e18``;
+    :func:`row_hashes` goes to 1e20, where the JVM cast overflows."""
     if math.isnan(v):
         return "d:nan"
     if math.isinf(v):
         return "d:inf" if v > 0 else "d:-inf"
-    if abs(v) >= 1e18:
+    if abs(v) >= limit:
         raise ValueError(
-            f"pset float {v!r} out of canonical-hash range (|v| < 1e18); "
+            f"pset float {v!r} out of canonical-hash range (|v| < {limit:g}); "
             "store it as a string or rescale"
         )
-    if v == 0.0:
-        v = 0.0  # normalize -0.0
-    # Spark's CAST(double AS DECIMAL(38,18)) goes through Java
-    # Double.toString (shortest round-trip repr), NOT the exact binary
-    # expansion — mirror that by parsing Python's repr (also shortest).
+    # the digits of Java 17's Double.toString (module docstring), not
+    # the exact binary expansion
+    if v == int(v) and abs(v) < 2.0**63:
+        n = int(v)
+        k = _JAVA_DROPPED_DIGITS.get(abs(n).bit_length() - 1, 0)
+        if k:
+            q, r = divmod(abs(n), 10**k)
+            n = (q + (2 * r >= 10**k)) * 10**k * (1 if n > 0 else -1)
+        return f"d:{n}.{'0' * 18}"  # -0.0 canons as 0
     with localcontext() as ctx:
         ctx.prec = 60
         d = Decimal(repr(v)).quantize(_Q18, rounding=ROUND_HALF_UP)
+    if d == 0:
+        d = abs(d)  # a tiny negative rounds to 0, unsigned on the JVM
     return f"d:{d:.18f}"
 
 
@@ -154,6 +180,16 @@ def canon_value(v) -> str:
         from pyspark import cloudpickle
 
         return "p:" + cloudpickle.dumps(v).hex()
+
+
+def _canon_ts(wall: _dt.datetime) -> str:
+    """``t:`` + the wall time as ``date_format(.., "yyyy-MM-dd
+    HH:mm:ss.SSSSSS")`` prints it (the year zero-padded, which
+    ``strftime("%Y")`` is not)."""
+    return (
+        f"t:{wall.year:04d}-{wall.month:02d}-{wall.day:02d} "
+        f"{wall.hour:02d}:{wall.minute:02d}:{wall.second:02d}.{wall.microsecond:06d}"
+    )
 
 
 def _canon_native(v) -> str:
@@ -193,8 +229,8 @@ def _canon_native(v) -> str:
         return "x:" + bytes(v).hex()
     if isinstance(v, _dt.datetime):
         if v.tzinfo is not None:
-            v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-        return "t:" + v.strftime("%Y-%m-%d %H:%M:%S.%f")
+            v = v.astimezone(_dt.timezone.utc)
+        return _canon_ts(v)
     if isinstance(v, _dt.date):
         return "D:" + v.isoformat()
     if isinstance(v, np.ndarray):
@@ -335,6 +371,72 @@ def hash_expr(schema: T.StructType, cols: list[str] | None = None) -> Column:
     row count without leaving the JVM.
     """
     return F.sha2(canon_expr(schema, cols), 256)
+
+
+_TS = T.TimestampType()
+_EPOCH = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
+
+
+def _canon_cell(v, dt: T.DataType, tz: _dt.tzinfo) -> str:
+    """Python twin of :func:`_canon_col` for one typed cell (a cell of
+    ``runner._typed_rows``): the same string, with timestamps printed in
+    the session time zone ``tz``."""
+    if v is None or isinstance(dt, T.NullType):
+        return "n"
+    if isinstance(dt, _INTEGRAL):
+        return f"i:{int(v)}"
+    if isinstance(dt, (T.DoubleType, T.FloatType)):
+        return "n" if math.isnan(v) else _canon_double(float(v), 1e20)
+    if isinstance(dt, T.BooleanType):
+        return "b:true" if v else "b:false"
+    if isinstance(dt, T.StringType):
+        return f"s{len(v.encode('utf-8'))}:{v}"
+    if isinstance(dt, T.TimestampType):
+        # the instant as toInternal takes it (a naive value is
+        # driver-local time, an aware one is read by its offset)
+        t = _EPOCH + _dt.timedelta(microseconds=_TS.toInternal(v))
+        return _canon_ts(t.astimezone(tz))
+    if isinstance(dt, T.DateType):
+        return "D:" + v.isoformat()
+    if isinstance(dt, T.BinaryType):
+        return "x:" + bytes(v).hex()
+    if isinstance(dt, T.ArrayType):
+        return "[" + ",".join(_canon_cell(x, dt.elementType, tz) for x in v) + "]"
+    if isinstance(dt, T.StructType):
+        fields = sorted(enumerate(dt.fields), key=lambda f: f[1].name)
+        return "{" + ",".join(
+            f"{f.name}={_canon_cell(v[i], f.dataType, tz)}" for i, f in fields
+        ) + "}"
+    raise PsweepHashError(f"unsupported type for canonical hash: {dt}")
+
+
+def row_hashes(
+    schema: T.StructType,
+    rows: list[tuple],
+    cols: list[str],
+    tz: _dt.tzinfo = _dt.timezone.utc,
+) -> list[str]:
+    """``_pset_hash`` of each typed row over the pset columns ``cols``,
+    bit-for-bit what :func:`df_hash_expr` stamps on the same rows in a
+    session whose time zone is ``tz``, computed on the driver.  A
+    top-level binary cell canons through :func:`canon_value`, as
+    :func:`hash_expr_py` does, so a pickled object hashes value-wise."""
+    keys = [
+        (f"k{len(n.encode('utf-8'))}:{n}", schema.names.index(n), schema[n].dataType)
+        for n in sorted(cols)
+    ]
+
+    def canon(v, dt: T.DataType) -> str:
+        if isinstance(dt, T.BinaryType):  # MAGIC framing is top-level only
+            return canon_value(None if v is None else bytes(v))
+        return _canon_cell(v, dt, tz)
+
+    return [
+        hashlib.sha256(
+            "".join(k + canon(r[i], dt) for k, i, dt in keys).encode("utf-8")
+        ).hexdigest()
+        for r in rows
+    ]
 
 
 def hash_expr_py(schema: T.StructType, cols: list[str] | None = None) -> Column:

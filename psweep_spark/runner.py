@@ -4,7 +4,8 @@ Reference lifecycle (``/root/reference/src/psweep/psweep.py:1295-1492``)
 re-expressed in Spark:
 
     grid
-      → hash stamp  (JVM-side canonical sha256, hashing.hash_expr)
+      → hash stamp  (canonical sha256: JVM-side hashing.hash_expr for
+        a DataFrame grid, its Python twin for a list)
       → skip-dups against DB hashes                (#11/#20)
       → id/seq stamping (_run_id/_pset_id/_run_seq/_pset_seq) (#18)
       → func on every pset: serially on the driver, as the reference
@@ -17,21 +18,19 @@ distributed plan, skip-dups as a left-anti join against the DB hash
 set (:func:`skip_dups_anti_join`); before the write only a bounded
 ``take`` (emptiness check + schema probe) and a ``max(__order)`` agg
 (seq slot span) execute it.  An eager list-of-dicts grid is already on
-the driver and stays there (:func:`_eager_hashes`): it becomes an
-Arrow ``LocalRelation`` (:func:`_local_df`, also behind
-:func:`prepare_params_df`) only for the JVM hash, and its hashes are
-collected (no job for a JVM-hashable grid).  Under skip-dups against
-an existing DB one probe returns the DB hashes among them: a left-semi
-join of the DB's ``_pset_hash`` column against the broadcast grid
-hashes (two jobs: the broadcast, then the DB scan), so the DB streams
-and there is no shuffle and no ``distinct()``.  The kept psets' ids
-are stamped in Python, ``_pset_seq`` from their submission order.
-Without ``poolsize`` (and without ``func_pandas``)
+the driver and stays there (:func:`_eager_hashes`), as the reference
+hashes and filters it: its typed rows are hashed in Python by
+:func:`hashing.row_hashes`, the twin of the JVM expression, and under
+skip-dups :meth:`Database.stored_hashes` returns the DB hashes among
+them, read by pyarrow on the driver (a Spark probe past a size cap).
+The kept psets' ids are stamped in Python, ``_pset_seq`` from their
+submission order.  Without ``poolsize`` (and without ``func_pandas``)
 :func:`_run_on_driver` calls ``func`` on each on the driver and the
 results become one Arrow table, which :meth:`Database.append` writes
 on the driver as one Parquet file: the run's write is no Spark job,
-and a run without skip-dups runs none at all (while the table has at
-most 32 runs; past that, listing it in ``Database.load`` is one).
+so the run, skip-dups or not, runs none at all while the table has at
+most 32 runs (past that, listing it in the ``Database.load`` of the
+returned DataFrame is one).
 With ``poolsize`` or ``func_pandas`` the stamped rows become a
 ``LocalRelation`` that runs in the executor stage like a lazy grid:
 ``poolsize`` tasks, else one.
@@ -141,7 +140,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from .database import Database
-from .hashing import df_hash_expr, filter_cols, pset_hash
+from .hashing import df_hash_expr, filter_cols, row_hashes
 from .objects import META_KEY, maybe_unpickle, obj_to_bytes, pickled_cols
 
 __all__ = [
@@ -800,8 +799,10 @@ def git_exit(use_git: bool, run_id: str, cwd: str = ".") -> None:
 def skip_dups_anti_join(params_df: DataFrame, hashes: DataFrame) -> DataFrame:
     """The skip-dups stage of :func:`run` for a lazy ``DataFrame``
     grid: drop every grid row whose ``_pset_hash`` already exists in
-    the DB hash relation.  An eager grid, bounded by the driver, probes
-    the other way round instead (:func:`_eager_hashes`).
+    the DB hash relation.  An eager grid, bounded by the driver, is
+    filtered on the driver instead (:func:`_eager_hashes`): only past
+    :meth:`Database.stored_hashes`'s size cap does Spark probe it, and
+    then the other way round, the grid's hashes as the broadcast side.
 
     Scale shape: a LEFT ANTI join where the GRID side streams (it may
     be a lazy 10⁹-row cross product that must never shuffle wholesale
@@ -834,35 +835,18 @@ def _eager_hashes(
     skip_dups: bool,
 ) -> tuple[list[tuple], list[str]]:
     """Eager grid → (the typed rows to run, their ``_pset_hash``), in
-    submission order.
+    submission order, all on the driver, as the reference hashes and
+    filters (psweep.py:208-270, 1438-1439).
 
-    The grid is already a list on the driver, so it stays there: it
-    becomes an Arrow ``LocalRelation`` (:func:`_local_df`) only so that
-    the JVM hash expression stamps it, and its ``(__order, _pset_hash)``
-    pairs are collected (no job for a JVM-hashable grid under Spark's
-    local-relation threshold).  Under skip-dups against an existing DB,
-    one probe asks the DB which of those hashes it holds: a left-semi
-    join of the DB's ``_pset_hash`` column against the broadcast grid
-    hashes (two jobs: the broadcast, then the DB scan).  The DB side
-    streams and the build side is bounded by the grid, not the history,
-    so the probe runs no shuffle and no ``distinct()``.  The rows whose
-    hash the DB holds are dropped; a repeat inside the grid keeps every
-    copy."""
-    order_schema = T.StructType(
-        schema.fields + [T.StructField("__order", T.LongType(), False)]
-    )
-    grid = _local_df(spark, order_schema, [r + (i,) for i, r in enumerate(rows)])
-    grid = grid.withColumn("_pset_hash", df_hash_expr(grid.schema, pset_cols))
-    hashes = [h for _, h in sorted(grid.select("__order", "_pset_hash").collect())]
-    stored_df = db.load(spark) if skip_dups else None
-    if stored_df is None:
+    The rows are hashed by :func:`hashing.row_hashes`, the Python twin of
+    the JVM hash expression, in the session time zone.  Under skip-dups
+    :meth:`Database.stored_hashes` says which of those hashes the DB
+    holds (pyarrow on the driver; Spark past a size cap), and those rows
+    are dropped; a repeat inside the grid keeps every copy."""
+    hashes = row_hashes(schema, rows, pset_cols, _session_tz(spark))
+    if not skip_dups:
         return rows, hashes
-    stored = {
-        r[0]
-        for r in stored_df.select("_pset_hash")
-        .join(F.broadcast(grid.select("_pset_hash")), "_pset_hash", "left_semi")
-        .collect()
-    }
+    stored = db.stored_hashes(spark, hashes)
     kept = [i for i, h in enumerate(hashes) if h not in stored]
     return [rows[i] for i in kept], [hashes[i] for i in kept]
 

@@ -211,6 +211,158 @@ def test_prop_python_vs_duckdb_parity(p):
     assert got == pset_hash(p), p
 
 
+# -- the driver twin of the JVM hash (hashing.row_hashes) -------------------
+
+_BIG = 2.0**53
+# doubles across pset_hash's range (|v| < 1e18): -0.0, NaN, tiny negatives
+# that round to 0, and integer-valued doubles above 2**53 (Java 17 prints
+# those exactly, or with one digit rounded off from 2**58)
+_double = st.one_of(
+    st.floats(min_value=-1e18, max_value=1e18, exclude_min=True,
+              exclude_max=True, allow_nan=False),
+    st.integers(min_value=-(10**18), max_value=10**18).map(float)
+    .filter(lambda v: abs(v) < 1e18),
+    st.integers(min_value=int(_BIG), max_value=2**60).map(float)
+    .filter(lambda v: v < 1e18),
+    st.sampled_from([-0.0, 0.0, float("nan"), float("inf"), float("-inf"),
+                     -1e-19, -5e-19, 4.9e-19, _BIG, _BIG + 2, 2.0**58,
+                     -(2.0**59) - 128, 0.1, 1e-5]),
+)
+# and on to the JVM's DECIMAL(38,18) limit (1e20), which row_hashes keeps:
+# two digits rounded off from 2**61, the shortest repr from 2**63
+_wide_double = st.one_of(
+    _double,
+    st.integers(min_value=-(10**20), max_value=10**20).map(float)
+    .filter(lambda v: abs(v) < 1e20),
+    st.sampled_from([1e18, -1e18, 2.0**61 + 512, 2.0**62 - 1024, 2.0**63,
+                     -9.5e18, 1.2345678901234567e19, 9.99e19]),
+)
+_text = st.text(alphabet=st.characters(blacklist_categories=("Cs",)), max_size=8)
+_when = st.datetimes(
+    min_value=dt.datetime(1000, 1, 1), max_value=dt.datetime(2500, 12, 31)
+)
+_aware = st.datetimes(
+    min_value=dt.datetime(1000, 1, 2), max_value=dt.datetime(2500, 12, 30),
+    timezones=st.sampled_from([
+        dt.timezone.utc,
+        dt.timezone(dt.timedelta(hours=-3, minutes=-30)),
+        dt.timezone(dt.timedelta(hours=9)),
+    ]),
+)
+#: one value strategy per pset column, so each column keeps one type
+_EAGER_COLUMNS = {
+    "i": st.integers(min_value=-(2**63), max_value=2**63 - 1),
+    "x": _wide_double,
+    "s": _text,
+    "f": st.booleans(),
+    "d": st.one_of(st.dates(), st.sampled_from([
+        dt.date(1582, 10, 4), dt.date(1582, 10, 15), dt.date(1500, 3, 1),
+        dt.date(1, 1, 1)])),
+    "t": st.one_of(_when, _aware),
+    "tl": st.lists(st.one_of(st.none(), _when, _aware), max_size=3),
+    "c": st.complex_numbers(max_magnitude=1e17, allow_infinity=False),
+    "xx": st.lists(st.lists(_wide_double, max_size=3), max_size=3),
+    # array<null>; two nulls in one list trip pyspark's Arrow
+    # createDataFrame, which _local_df goes through
+    "e": st.sampled_from([[], [None]]),
+    "rb": st.lists(st.binary(max_size=6), max_size=2),
+}
+#: top-level binary columns, which df_hash_expr hashes in a pandas UDF:
+#: raw bytes, and a column of mixed objects that pickle_objects frames
+_BINARY_COLUMNS = {
+    "r": st.binary(max_size=8),
+    "o": st.sampled_from([max, "str", 3, 2.5, (1, "a"), b"\x00"]),
+}
+
+
+@st.composite
+def _eager_grid(draw):
+    cols = dict(_EAGER_COLUMNS)
+    if draw(st.booleans()):
+        cols.update(_BINARY_COLUMNS)
+    n = draw(st.integers(min_value=1, max_value=4))
+    return [
+        {k: draw(st.one_of(st.none(), v)) for k, v in cols.items()}
+        for _ in range(n)
+    ]
+
+
+def _jvm_hashes(spark, schema, rows):
+    """df_hash_expr over _local_df of the typed rows, in row order."""
+    from pyspark.sql import types as T
+
+    from psweep_spark.hashing import df_hash_expr
+    from psweep_spark.runner import _local_df
+
+    with_order = T.StructType(schema.fields + [T.StructField("_i", T.LongType())])
+    df = _local_df(spark, with_order, [r + (i,) for i, r in enumerate(rows)])
+    got = df.select("_i", df_hash_expr(df.schema, filter_cols(schema.names))).collect()
+    return [h for _, h in sorted(got)]
+
+
+def test_row_hashes_match_df_hash_expr_off_utc(spark):
+    """The driver twin (row_hashes) equals df_hash_expr over a DataFrame
+    of the same typed rows, for every type an eager grid infers, with
+    the driver's TZ and the session time zone both off UTC (and off
+    each other): a naive timestamp is driver-local time, formatted in
+    the session zone."""
+    import os
+    import time
+
+    from psweep_spark.hashing import row_hashes
+    from psweep_spark.runner import _session_tz, _typed_rows
+
+    key = "spark.sql.session.timeZone"
+    old_zone, old_tz = spark.conf.get(key), os.environ.get("TZ")
+
+    @given(_eager_grid())
+    @settings(max_examples=60, deadline=None,
+              suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large])
+    def check(psets):
+        schema, rows = _typed_rows(psets, pickle_objects=True)
+        want = _jvm_hashes(spark, schema, rows)
+        tz = _session_tz(spark)
+        assert row_hashes(schema, rows, filter_cols(schema.names), tz) == want
+
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    spark.conf.set(key, "Asia/Kolkata")
+    try:
+        check()
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+        spark.conf.set(key, old_zone)
+
+
+_scalar_column = st.sampled_from([
+    st.integers(min_value=-(2**63), max_value=2**63 - 1),
+    _double.filter(lambda v: abs(v) != float("inf")),
+    _text,
+    st.booleans(),
+])
+
+
+@given(st.lists(_scalar_column, min_size=1, max_size=4).flatmap(
+    lambda kinds: st.lists(
+        st.fixed_dictionaries({
+            f"p{j}": st.one_of(st.none(), kind) for j, kind in enumerate(kinds)
+        }),
+        min_size=1, max_size=4,
+    )
+))
+@settings(max_examples=40, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+def test_prop_pset_hash_matches_hash_expr(spark, psets):
+    """pset_hash of a scalar pset equals the JVM hash_expr of its row."""
+    from psweep_spark.runner import _typed_rows
+
+    schema, rows = _typed_rows(psets)
+    assert _jvm_hashes(spark, schema, rows) == [pset_hash(p) for p in psets]
+
+
 # ---------------------------------------------------------------------------
 # joblib-compat migration hash (compat_hash.py; reference psweep.py:33,208-270)
 # ---------------------------------------------------------------------------

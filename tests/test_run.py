@@ -86,18 +86,17 @@ def _run_files(calc_dir, run_id):
 
 
 def test_eager_skip_dups_runs_few_jobs(spark, calc_dir):
-    """An eager skip-dups run keeps its grid on the driver, its Database
-    calls read the manifest, not the table, and its one file is written
-    on the driver: a second run(skip_dups=True, safe=True) runs at most
-    2 Spark jobs (the broadcast of the grid's hashes, the left-semi
-    probe of the DB), where the take/agg/take/write sequence with
-    schema-merge loads took 20."""
+    """An eager skip-dups run hashes its grid and probes the DB's hashes
+    on the driver, its Database calls read the manifest, not the table,
+    and its one file is written on the driver: a second
+    run(skip_dups=True, safe=True) runs no Spark job, where the
+    take/agg/take/write sequence with schema-merge loads took 20."""
     run(spark, func_a, pgrid([plist("a", list(range(40)))]),
         calc_dir=calc_dir, skip_dups=True, safe=True)
     jobs, df = jobs_of(spark, lambda: run(
         spark, func_a, pgrid([plist("a", list(range(20, 60)))]),
         calc_dir=calc_dir, skip_dups=True, safe=True))
-    assert 0 < len(jobs) <= 2, len(jobs)
+    assert jobs == []
     assert df.count() == 60
 
 
@@ -153,14 +152,17 @@ def _subtree(plan: str, marker: str) -> list[str]:
 
 
 def test_eager_skip_dups_probe_plan(spark, calc_dir, monkeypatch):
-    """The eager skip-dups probe streams the DB and broadcasts the
-    grid's hashes: its executed plan has no shuffle, no aggregate, and
-    the DB's FileScan is not under the BroadcastExchange."""
+    """Past its size cap, the eager skip-dups probe runs in Spark: it
+    streams the DB and broadcasts the grid's hashes, so its executed
+    plan has no shuffle, no aggregate, and the DB's FileScan is not
+    under the BroadcastExchange."""
     from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
+    from psweep_spark import database
     from psweep_spark.plans import _drop_initial_plan_sections
 
     run(spark, func_a, pgrid([plist("a", list(range(30)))]), calc_dir=calc_dir)
+    monkeypatch.setattr(database, "PROBE_MAX_BYTES", 0)
     collect, seen = ClassicDataFrame.collect, []
 
     def recording_collect(self):
@@ -182,6 +184,74 @@ def test_eager_skip_dups_probe_plan(spark, calc_dir, monkeypatch):
     assert "HashAggregate" not in plan, plan
     assert "FileScan" in plan, plan
     assert not any("FileScan" in line for line in _subtree(plan, "BroadcastExchange")), plan
+
+
+def test_eager_runs_past_32_runs_list_the_table_once(spark, calc_dir):
+    """Past 32 ``_run_id`` partitions listing the table is one Spark job.
+    An eager run lists it once, for the DataFrame it returns: the
+    skip-dups probe reads the files with pyarrow, and append takes the
+    widening check's pset columns from the manifest."""
+    for a in range(40):
+        run(spark, func_a, [{"a": a}], calc_dir=calc_dir)
+    jobs, df = jobs_of(spark, lambda: run(
+        spark, func_a, [{"a": 0}, {"a": 100}], calc_dir=calc_dir,
+        skip_dups=True))
+    assert len(jobs) == 1, jobs
+    assert df.count() == 41
+    jobs, df = jobs_of(spark, lambda: run(spark, func_a, [{"a": 200}],
+                                          calc_dir=calc_dir))
+    assert len(jobs) == 1, jobs
+    assert df.count() == 42
+
+
+def _widened_db(spark, calc_dir):
+    run(spark, func_a, pgrid([plist("a", [1, 2, 3])]), calc_dir=calc_dir)
+    run(spark, func_a, pgrid([plist("a", [1, 4]), plist("b", [5, 6])]),
+        calc_dir=calc_dir)
+    db = Database(os.path.join(calc_dir, "database"))
+    assert db.read_meta()["data_dir"].startswith("data."), db.read_meta()
+    return [{"a": a, "b": b} for a in (1, 2, 4, 7) for b in (None, 5, 6)]
+
+
+def _multi_file_db(spark, calc_dir):
+    df = run(spark, func_a, pgrid([plist("a", list(range(12)))]),
+             calc_dir=calc_dir, poolsize=2)
+    assert len(_run_files(calc_dir, df.first()["_run_id"])) == 2
+    return [{"a": a} for a in range(6, 18)]
+
+
+def _repeats_grid(spark, calc_dir):
+    run(spark, func_a, [{"a": 2}, {"a": 4}], calc_dir=calc_dir)
+    return [{"a": v} for v in (5, 2, 5, 4, 6, 6, 2)]
+
+
+@pytest.mark.parametrize("make", [_widened_db, _multi_file_db, _repeats_grid],
+                         ids=["widened", "multi_file", "grid_repeats"])
+def test_eager_driver_probe_matches_spark_probe(spark, calc_dir, monkeypatch,
+                                                make):
+    """The pyarrow probe on the driver and the Spark probe it falls back
+    to past its size cap keep the same rows of an eager grid, in the
+    same order: on a table rewritten by a widening append (live
+    directory ``data.<uuid>``), on runs of several files, and for a grid
+    that repeats psets inside itself."""
+    from psweep_spark import database
+    from psweep_spark.runner import _eager_hashes, _typed_rows
+
+    grid = make(spark, calc_dir)
+    db = Database(os.path.join(calc_dir, "database"))
+    schema, rows = _typed_rows(grid)
+    cols = [c for c in schema.names if not c.startswith("_")]
+    jobs, driver = jobs_of(spark, lambda: _eager_hashes(
+        spark, db, schema, rows, cols, skip_dups=True))
+    assert jobs == []
+    monkeypatch.setattr(database, "PROBE_MAX_BYTES", 0)
+    jobs, fallback = jobs_of(spark, lambda: _eager_hashes(
+        spark, db, schema, rows, cols, skip_dups=True))
+    assert jobs
+    assert driver == fallback
+    stored = {r[0] for r in db.load(spark).select("_pset_hash").collect()}
+    kept = set(driver[1])
+    assert kept and not kept & stored and len(driver[0]) < len(rows)
 
 
 @pytest.mark.parametrize("local_relation", [True, False],

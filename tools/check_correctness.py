@@ -26,6 +26,10 @@ import pandas as pd
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+# the Python workers Spark starts import the package too, from PYTHONPATH
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
